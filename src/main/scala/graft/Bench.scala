@@ -1,45 +1,39 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (count() would let Catalyst prune the computed columns away).
   *
   * Emission contract: the LAST stdout line is a compact total-only
-  * JSON record (it must fit a bounded tail capture); the per-query
-  * map goes to `target/bench-detail.json` and a committed copy
-  * `BENCH_DETAIL.json`.
+  * JSON record (it must fit a bounded tail capture); `value` is this
+  * run's measured total. The per-query map of this run's times goes to
+  * `target/bench-detail.json`; a bench run writes nothing else.
   *
   * Wall-time protocol (revised round 11 — the old full-warm-up +
   * 2-measured-passes protocol scaled as 3 full passes and outgrew the
   * driver's time budget at 559 queries, killing the r10 run at
-  * rc=124):
+  * rc=124). The one baseline is the FROZEN round-stamped
+  * `BENCH_DETAIL_r<N>.json` (highest N; written once at round close,
+  * never by Bench):
   *
-  *   1. warm up ONLY queries with no committed floor (absent from both
-  *      the frozen round baseline and the merged detail) — i.e. queries
-  *      new this round. Steady-state JIT for the rest is recovered by
+  *   1. warm up ONLY queries with no frozen floor — i.e. queries new
+  *      this round. Steady-state JIT for the rest is recovered by
   *      step 3.
   *   2. ONE measured pass over the whole suite.
-  *   3. targeted re-run of suspects: any query measured >1.5x its best
-  *      committed floor (floor >0.2s) runs once more and keeps the min.
+  *   3. targeted re-run of suspects: any query measured >1.5x its
+  *      frozen floor (floor >0.2s) runs once more and keeps the min.
   *      This discards first-run codegen/JIT inflation and host blips
   *      for the handful of lines they hit, instead of paying a second
   *      full pass for everyone.
-  *   4. regression guard (loud WARN) on the post-re-run values vs TWO
-  *      baselines: the FROZEN round-stamped `BENCH_DETAIL_r<N>.json`
-  *      (highest N wins; written once at round close, never by Bench)
-  *      and the MERGED `BENCH_DETAIL.json` (best observed so far).
-  *   5. the written detail is the cross-round min: per query
-  *      min(measured, committed merged floor). The measured-this-run
-  *      total is recorded beside it as `measured_total`.
+  *   4. regression guard (loud WARN) on the post-re-run values vs the
+  *      frozen floors.
   *
   * Failure discipline: a query that throws is EXCLUDED from the
   * queries map and listed under `"failed"` — its wall-to-exception
   * time must never enter the detail (the r10 driver timeout stamped
-  * 104 failure stubs at 0.009–0.015s into the merged baseline).
-  * Merged-baseline entries below 0.05s are likewise ignored as floors:
-  * no real sf0.1 query finishes that fast, so they can only be stubs.
+  * 104 failure stubs at 0.009–0.015s into the detail). Frozen entries
+  * below 0.05s are likewise ignored as floors: no real sf0.1 query
+  * finishes that fast, so they can only be stubs.
   */
 object Bench {
 
@@ -62,18 +56,61 @@ object Bench {
       .toMap
   }
 
-  /** Stub guard: committed floors below this are timed-out-run debris,
+  /** Stub guard: frozen floors below this are timed-out-run debris,
     * not measurements — no suite query completes in <50ms at sf0.1.
     */
   private[graft] val PlausibleFloor = 0.05
 
+  /** A measured time is suspect (re-run) or a regression (WARN) when
+    * it exceeds 1.5x a floor above 0.2s. Host noise is ±25% (SURVEY
+    * §7), and sub-200ms lines are scheduler noise.
+    */
+  private[graft] def exceeds(floor: Double, secs: Double): Boolean =
+    floor > 0.2 && secs > floor * 1.5
+
+  /** (name, floor, now) for every measured query that regressed. */
+  private[graft] def regressions(results: Seq[(String, Double)],
+      frozen: Map[String, Double]): Seq[(String, Double, Double)] =
+    results.flatMap { case (name, secs) =>
+      frozen.get(name).filter(exceeds(_, secs)).map(p => (name, p, secs))
+    }
+
+  /** The detail record and the compact stdout line of one run. Both
+    * carry this run's measured total as `value`; the detail's
+    * `queries` holds this run's time per query, failed queries only
+    * under `failed`.
+    */
+  private[graft] def emit(results: Seq[(String, Double)], failed: Seq[String],
+      frozen: Map[String, Double], frozenName: Option[String],
+      sfDir: String): (String, String) = {
+    // Locale.ROOT: the f-interpolator is locale-sensitive, and a
+    // comma-decimal default locale would emit invalid JSON here.
+    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def str(s: String) = "\"" + s + "\""
+    val regs = regressions(results, frozen)
+    val head =
+      s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec",""" +
+        s""""n_queries":${results.size},"sf":${str(sfDir)},"""
+    val qs = results.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString(",")
+    val regJson = regs
+      .map { case (n, p, s) => str(n) + ":{\"prior\":" + fmt(p) + ",\"now\":" + fmt(s) + "}" }
+      .mkString("{", ",", "}")
+    val detail = head +
+      s""""failed":${failed.map(str).mkString("[", ",", "]")},""" +
+      s""""frozen_baseline":${frozenName.map(str).getOrElse("null")},""" +
+      s""""regressions_vs_frozen":$regJson,"queries":{$qs}}"""
+    // the empty "queries" keeps the line's {metric,value,unit,queries}
+    // shape for tail parsers; the per-query map is in the detail
+    val line = head +
+      s""""queries":{},"failed":${failed.size},"regressions_vs_frozen":${regs.size},""" +
+      s""""detail":"target/bench-detail.json"}"""
+    (detail, line)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional: query names as args restrict the run (targeted
-    // min-of-2 re-measure of a flagged line). Subset runs NEVER write
-    // the detail/baseline files — a 3-query run must not become the
-    // next round's regression baseline.
+    // min-of-2 re-measure of a flagged line)
     val only = args.toSet
     val unknown = only -- Queries.all.map(_.name).toSet
     if (unknown.nonEmpty)
@@ -81,16 +118,7 @@ object Bench {
       // n_queries=0 and a valid-looking total of 0.000
       System.err.println(s"[bench] WARNING unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     def selected = if (only.isEmpty) Queries.all else Queries.all.filter(q => only(q.name))
-    val spark = GraftSession.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.codegen.maxFields", "512")
-      .config(GraftSession.LocalSpreadKey, "true") // single-row-group local files
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // WindowExec's "No Partition Defined" warning fires once per task
     // for every window over an already-aggregated O(days)/O(bins)/
     // O(groups) frame — the documented idiom across the suite, each
@@ -103,57 +131,16 @@ object Bench {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
-    // Baselines load FIRST: they decide which queries get a warm-up
+    // The baseline loads FIRST: it decides which queries get a warm-up
     // and which measured times earn a confirming re-run.
-    def loadBaseline(f: java.io.File): Map[String, Double] =
-      if (f.exists()) {
-        val src = scala.io.Source.fromFile(f)
-        try parseFlatNumbers(src.mkString) finally src.close()
-      } else Map.empty
     val frozenFile = Option(new java.io.File(".").listFiles()).toSeq.flatten
       .filter(f => f.getName.matches("BENCH_DETAIL_r\\d+\\.json"))
       .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
       .lastOption
-    val frozen = frozenFile.map(loadBaseline).getOrElse(Map.empty)
-    // A detail file measured at a DIFFERENT scale factor must never
-    // supply floors or min-merge values: an sf0.01 run's times would
-    // silently replace sf0.1 measurements. Only the same-sf baseline
-    // counts; the "sf" metadata field records which one that was.
-    val mergedFile = new java.io.File("BENCH_DETAIL.json")
-    val mergedRaw =
-      if (mergedFile.exists()) {
-        val src = scala.io.Source.fromFile(mergedFile)
-        try src.mkString finally src.close()
-      } else ""
-    val mergedSfOk = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(mergedRaw)
-      .exists(_.group(1) == sfDir)
-    if (mergedRaw.nonEmpty && !mergedSfOk)
-      System.err.println(s"[bench] WARNING merged BENCH_DETAIL.json is for a different sf — ignored as baseline")
-    val merged =
-      if (mergedSfOk) parseFlatNumbers(mergedRaw).filter(_._2 >= PlausibleFloor)
-      else Map.empty[String, Double]
-    def floorOf(name: String): Option[Double] =
-      (frozen.get(name).filter(_ >= PlausibleFloor).toSeq ++ merged.get(name).toSeq)
-        .reduceOption((a, b) => math.min(a, b))
-
-    // Adjudicated noise bands (optional BENCH_NOISE.json, same flat
-    // "queries" shape). The merged-minima ratchet keeps all-time-best
-    // floors forever, so a floor set in an exceptionally fast host
-    // window re-flags EVERY subsequent run (q224_durbin_watson fired
-    // in r11, r12, and the r12 driver run, each time re-adjudicated as
-    // the same ratchet). A PLANS-adjudicated line gets a band here: the
-    // regression guard compares against max(floor, band), so the WARN
-    // threshold reflects the quiet-host re-measure, not the one-off
-    // best. Bands NEVER enter the written detail — minima stay true —
-    // and only silence the specific adjudicated lines (each band cites
-    // its PLANS note).
-    val noise = {
-      val f = new java.io.File("BENCH_NOISE.json")
-      if (f.exists()) {
-        val src = scala.io.Source.fromFile(f)
-        try parseFlatNumbers(src.mkString) finally src.close()
-      } else Map.empty[String, Double]
-    }
+    val frozen = frozenFile.map { f =>
+      val src = scala.io.Source.fromFile(f)
+      try parseFlatNumbers(src.mkString).filter(_._2 >= PlausibleFloor) finally src.close()
+    }.getOrElse(Map.empty[String, Double])
 
     // Pre-materialize the memoized spread tables (count() forces the
     // repartition+persist in Tables.apply) BEFORE any query runs, so
@@ -173,14 +160,13 @@ object Bench {
       } catch { case e: Throwable => Left(e) }
     }
 
-    // Warm-up pass restricted to queries without a committed floor
-    // (new or renamed this round): their single measurement must not
+    // Warm-up pass restricted to queries without a frozen floor (new
+    // or renamed this round): their single measurement must not
     // include first-run codegen/JIT. Established queries skip it; if
     // JIT inflates their one measured run past 1.5x floor, the suspect
     // re-run below retakes the measurement warm.
-    val fresh = selected.filter(q => floorOf(q.name).isEmpty)
     var warmupFailures = 0
-    fresh.foreach { q =>
+    selected.filterNot(q => frozen.contains(q.name)).foreach { q =>
       runOnce(q) match {
         case Right(s) => System.err.println(f"[bench] warmup ${q.name}: $s%.3fs")
         case Left(e) =>
@@ -194,11 +180,11 @@ object Bench {
 
     // One measured pass. Failures are recorded by NAME, never by time.
     val failed = scala.collection.mutable.ListBuffer[String]()
-    val pass1: Seq[(String, Double)] = selected.flatMap { q =>
+    val pass1: Seq[(QueryDef, Double)] = selected.flatMap { q =>
       runOnce(q) match {
         case Right(s) =>
           System.err.println(f"[bench] pass1 ${q.name}: $s%.3fs")
-          Some(q.name -> s)
+          Some(q -> s)
         case Left(e) =>
           failed += q.name
           System.err.println(s"[bench] FAILED ${q.name}: ${e.getMessage}")
@@ -206,103 +192,32 @@ object Bench {
       }
     }
 
-    // Targeted re-run of suspects: >1.5x the best committed floor
-    // (floor >0.2s — sub-200ms lines are scheduler noise). Keeps the
-    // min of the two runs; a failed re-run keeps the first time.
-    val byName = selected.map(q => q.name -> q).toMap
-    val results: Seq[(String, Double)] = pass1.map { case (name, s) =>
-      floorOf(name) match {
-        case Some(p) if p > 0.2 && s > p * 1.5 =>
-          runOnce(byName(name)) match {
+    // Targeted re-run of suspects; keeps the min of the two runs, and
+    // a failed re-run keeps the first time.
+    val results: Seq[(String, Double)] = pass1.map { case (q, s) =>
+      frozen.get(q.name) match {
+        case Some(p) if exceeds(p, s) =>
+          runOnce(q) match {
             case Right(s2) =>
-              System.err.println(f"[bench] rerun $name: $s%.3fs -> $s2%.3fs (floor $p%.3fs)")
-              name -> math.min(s, s2)
+              System.err.println(f"[bench] rerun ${q.name}: $s%.3fs -> $s2%.3fs (floor $p%.3fs)")
+              q.name -> math.min(s, s2)
             case Left(e) =>
-              System.err.println(s"[bench] RERUN FAILED $name: ${e.getMessage}")
-              name -> s
+              System.err.println(s"[bench] RERUN FAILED ${q.name}: ${e.getMessage}")
+              q.name -> s
           }
-        case _ => name -> s
+        case _ => q.name -> s
       }
     }
-    val measuredTotal = results.map(_._2).sum
 
-    // Regression guard vs TWO baselines. The FROZEN baseline is the
-    // highest-numbered BENCH_DETAIL_r<N>.json in cwd — written once at
-    // round close and never touched by Bench, so round-over-round
-    // drift is detectable (a self-overwriting merged-minima file can
-    // never flag it: each run ratchets its own baseline down). The
-    // MERGED baseline is BENCH_DETAIL.json — it catches within-round
-    // drift against the best observed. Host noise is ±25% (SURVEY §7),
-    // so the threshold is 1.5x and only queries slower than 0.2s in
-    // the baseline are eligible.
-    def regsVs(base: Map[String, Double], tag: String) = {
-      val rs = results.flatMap { case (name, secs) =>
-        base.get(name).map(p => math.max(p, noise.getOrElse(name, 0.0))).collect {
-          case p if p > 0.2 && secs > p * 1.5 => (name, p, secs)
-        }
-      }
-      rs.foreach { case (name, p, s) =>
-        System.err.println(f"[bench] WARN REGRESSION($tag) $name: $p%.3fs -> $s%.3fs (${s / p}%.2fx)")
-      }
-      rs
+    val tag = frozenFile.map(_.getName).getOrElse("frozen:none")
+    regressions(results, frozen).foreach { case (name, p, s) =>
+      System.err.println(f"[bench] WARN REGRESSION($tag) $name: $p%.3fs -> $s%.3fs (${s / p}%.2fx)")
     }
-    val regsFrozen = regsVs(frozen, frozenFile.map(_.getName).getOrElse("frozen:none"))
-    val regsMerged = regsVs(merged, "merged")
-
-    // Written detail = cross-round min vs the committed merged floor
-    // (the min-of-N-runs protocol, carried across JVMs instead of
-    // paying a second in-process pass). Failed queries never enter it.
-    val mergedResults = results.map { case (n, s) =>
-      n -> merged.get(n).fold(s)(math.min(s, _))
-    }
-    val total = mergedResults.map(_._2).sum
-
-    // Locale.ROOT: the f-interpolator is locale-sensitive, and a
-    // comma-decimal default locale would emit invalid JSON here (and
-    // corrupt the next run's regression-baseline parse).
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = mergedResults.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
-    def regJson(rs: Seq[(String, Double, Double)]) = rs
-      .map { case (n, p, s) => "\"" + n + "\":{\"prior\":" + fmt(p) + ",\"now\":" + fmt(s) + "}" }
-      .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val detail =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${mergedResults.size},""" +
-        s""""measured_total":${fmt(measuredTotal)},"failed":$failedJson,""" +
-        s""""sf":"$sfDir","frozen_baseline":${frozenFile.map("\"" + _.getName + "\"").getOrElse("null")},""" +
-        s""""regressions_vs_frozen":${regJson(regsFrozen)},""" +
-        s""""regressions_vs_prior":${regJson(regsMerged)},"queries":{$qs}}"""
-    if (only.isEmpty) {
-      new java.io.File("target").mkdirs()
-      java.nio.file.Files.write(java.nio.file.Paths.get("target/bench-detail.json"),
-        detail.getBytes("UTF-8"))
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-        detail.getBytes("UTF-8"))
-    }
-
-    // Per-query visibility for the driver (r14 verdict item 2): a full
-    // contract-shaped line carrying THIS-run measured seconds per query
-    // (NOT the min-merge ratchet — that stays in BENCH_DETAIL.json).
-    // Printed BEFORE the compact line so a tail-bounded parser still
-    // lands on the short parseable line below (the 2000-char tail
-    // clipped the head of an inline map in r3/r10 and zeroed the
-    // round's headline); a full-stdout parser finds this one.
-    val thisRunQs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${mergedResults.size},""" +
-        s""""queries":{$thisRunQs},"measured_total":${fmt(measuredTotal)},"failed":${failed.size},""" +
-        s""""regressions_vs_frozen":${regsFrozen.size},""" +
-        s""""regressions_vs_prior":${regsMerged.size},""" +
-        s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
-    // Compact total-only line LAST on stdout: the official artifact
-    // captures a bounded tail, and the 102-entry per-query map broke
-    // the parse in r2/r3. Detail lives in the files written above.
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${mergedResults.size},""" +
-        s""""queries":{},"measured_total":${fmt(measuredTotal)},"failed":${failed.size},""" +
-        s""""regressions_vs_frozen":${regsFrozen.size},""" +
-        s""""regressions_vs_prior":${regsMerged.size},""" +
-        s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+    val (detail, line) = emit(results, failed.toSeq, frozen, frozenFile.map(_.getName), sfDir)
+    new java.io.File("target").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get("target/bench-detail.json"),
+      detail.getBytes("UTF-8"))
+    println(line)
     // every result is materialized by now — reclaim the snapshot-family
     // scratch tables so a bench session leaves /tmp as it found it
     Queries.sweepScratch()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -45,24 +44,14 @@ object Explain {
     val sfDir = args(0)
     val names = if (args.length > 1) args(1).split(",").toSeq else Queries.all.map(_.name)
     val n     = if (args.length > 2) args(2).toInt else 2
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = GraftSession.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.codegen.maxFields", "512")
-      .config(GraftSession.LocalSpreadKey, sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
-      .config("spark.ui.enabled", "false")
     // ad-hoc conf overrides for A/B plan experiments:
     // SPARK_GRAFT_CONF="key=value;key=value"
-    val spark = sys.env.get("SPARK_GRAFT_CONF").toSeq
+    // (e.g. spark.graft.localSpread=false for the cluster load path)
+    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';').toSeq).map(_.trim).filter(_.contains("="))
-      .foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+      .toMap
+    val spark = GraftSession.local(overrides = overrides)
     // SPARK_GRAFT_JOBS=1: per-job wall time + stage/task counts — the
     // action-overhead decomposition for iterative operators
     if (sys.env.get("SPARK_GRAFT_JOBS").contains("1"))

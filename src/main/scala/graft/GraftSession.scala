@@ -45,4 +45,39 @@ object GraftSession {
   /** Apply [[required]] to a builder (call sites may add their own). */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     required.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** Cores for a [[local]] session: `SPARK_GRAFT_CPUS`, else every core. */
+  def defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one local session builder, shared by the mains and the specs:
+    * [[required]] plus
+    *
+    *   - `local[cpus]` with one shuffle partition per core;
+    *   - a 16k AQE coalesce floor (Spark's is 1 MB), so small shuffles
+    *     keep spreading over the cores;
+    *   - `codegen.maxFields` 512, so the suite's wide projections stay
+    *     whole-stage compiled (the default cap is 100 fields);
+    *   - [[LocalSpreadKey]] on — the local files are single-row-group;
+    *   - no UI,
+    *
+    * then `overrides`, applied last. Log level WARN.
+    */
+  def local(cpus: Int = defaultCpus,
+      overrides: Map[String, String] = Map.empty): SparkSession = {
+    val confs = Map(
+      "spark.sql.shuffle.partitions"                           -> cpus.toString,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k",
+      "spark.sql.codegen.maxFields"                            -> "512",
+      LocalSpreadKey                                           -> "true",
+      "spark.ui.enabled"                                       -> "false") ++ overrides
+    val spark = confs
+      .foldLeft(configure(SparkSession.builder().master(s"local[$cpus]"))) {
+        case (b, (k, v)) => b.config(k, v)
+      }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -88,17 +88,7 @@ object ScaleBench {
     require(args.length >= 4, "usage: ScaleBench <srcSfDir> <dstDir> <replicas> <query...>")
     val (src, dst, replicas) = (args(0), args(1), args(2).toInt)
     val qnames = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.codegen.maxFields", "512")
-      .config(GraftSession.LocalSpreadKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     if (!new java.io.File(s"$dst/_DONE").exists()) generate(spark, src, dst, replicas)
 

@@ -42,11 +42,8 @@ final class Pipeline private (
     * failures — the reference tolerates a failing country fetch.
     */
   def extract(): (DataFrame, Seq[String]) = {
-    val attempts = sources.map { case (name, f) => name -> Try(f(spark)) }
-    val failed = attempts.collect { case (n, Failure(_)) => n }
-    val oks    = attempts.collect { case (_, Success(df)) => df }
-    require(oks.nonEmpty, "all sources failed")
-    (oks.reduce(_ unionByName _), failed)
+    val (built, failed) = build()
+    (union(built), failed)
   }
 
   def transformed(): DataFrame = {
@@ -56,16 +53,49 @@ final class Pipeline private (
 
   /** One batch ETL run: extract → transform → load to every sink.
     * Returns (recordCount, failedSources).
+    *
+    * A source can also fail only at execution (a corrupt file, a path
+    * gone since planning), which aborts the count. Then each source
+    * runs alone once into the noop sink; the ones that fail are
+    * dropped and listed, and the rest load once more. If no source
+    * fails alone, the original error is rethrown.
     */
   def refresh(): Pipeline.RefreshResult = {
-    val (raw, failed) = extract()
-    val out = transforms.foldLeft(raw)((df, f) => f(df))
+    val (built, failed) = build()
+    load(built, failed) match {
+      case Success(r) => r
+      case Failure(e) =>
+        val bad = built.collect {
+          case (n, df) if Try(df.write.format("noop").mode("overwrite").save()).isFailure => n
+        }
+        if (bad.isEmpty) throw e
+        load(built.filterNot { case (n, _) => bad.contains(n) }, failed ++ bad).get
+    }
+  }
+
+  /** Each source that builds, by name, and the names of those that don't. */
+  private def build(): (Seq[(String, DataFrame)], Seq[String]) = {
+    val attempts = sources.map { case (name, f) => name -> Try(f(spark)) }
+    (attempts.collect { case (n, Success(df)) => n -> df },
+      attempts.collect { case (n, Failure(_)) => n })
+  }
+
+  private def union(built: Seq[(String, DataFrame)]): DataFrame = {
+    require(built.nonEmpty, "all sources failed")
+    built.map(_._2).reduce(_ unionByName _)
+  }
+
+  /** Transform, count and sink; a Failure only when the count fails. */
+  private def load(built: Seq[(String, DataFrame)],
+      failed: Seq[String]): Try[Pipeline.RefreshResult] = {
+    val out = transforms.foldLeft(union(built))((df, f) => f(df))
     // cache: each sink re-reads the transformed set, not the sources
     val cached = out.persist()
     try {
-      val n = cached.count()
-      sinks.foreach { case (_, s) => s(cached) }
-      Pipeline.RefreshResult(n, failed)
+      val counted = Try(cached.count())
+      // sinks run outside the Try: a failing sink is no failing source
+      counted.foreach(_ => sinks.foreach { case (_, s) => s(cached) })
+      counted.map(Pipeline.RefreshResult(_, failed))
     } finally { cached.unpersist(); () }
   }
 

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit coverage for Bench's dependency-free detail-file parsing: the
+/** Unit coverage for Bench's dependency-free detail-file parsing (the
   * regression baseline must come ONLY from the "queries" object, never
-  * from metadata keys that happen to hold numbers.
+  * from metadata keys that happen to hold numbers) and for its
+  * emission: the headline is this run's measured total.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -34,5 +35,38 @@ class BenchSpec extends AnyFunSuite {
         """"regressions_vs_frozen": {"q1_agg": {"prior": 0.5, "now": 0.9}}, """ +
         """"queries": {"q1_agg": 0.72, "q7_topk": 0.148}}"""
     assert(Bench.parseFlatNumbers(detail) === Map("q1_agg" -> 0.72, "q7_topk" -> 0.148))
+  }
+
+  private val results = Seq("q1_agg" -> 0.7, "dedup_minhash" -> 4.0, "text_bm25" -> 0.3)
+  private val frozen = Map("q1_agg" -> 0.5, "dedup_minhash" -> 2.0, "text_bm25" -> 0.1)
+  private val (detail, line) =
+    Bench.emit(results, Seq("q7_topk"), frozen, Some("BENCH_DETAIL_r15.json"), "sf")
+
+  private def value(json: String): Double =
+    "\"value\":([0-9.]+)".r.findFirstMatchIn(json).get.group(1).toDouble
+
+  test("emit: value is the sum of this run's times, on both records") {
+    assert(value(detail) === 5.0)
+    assert(value(line) === 5.0)
+    assert(line.contains("\"detail\":\"target/bench-detail.json\""))
+  }
+
+  test("emit: a lower frozen floor never replaces a measured time") {
+    assert(Bench.parseFlatNumbers(detail) ===
+      Map("q1_agg" -> 0.7, "dedup_minhash" -> 4.0, "text_bm25" -> 0.3))
+  }
+
+  test("emit: a failed query is absent from queries and listed under failed") {
+    assert(!Bench.parseFlatNumbers(detail).contains("q7_topk"))
+    assert(detail.contains("\"failed\":[\"q7_topk\"]"))
+    assert(line.contains("\"failed\":1,"))
+  }
+
+  test("emit: a >1.5x regression of a >0.2s floor is reported, noise is not") {
+    // dedup_minhash 2.0 -> 4.0 regressed; q1_agg is 1.4x; text_bm25's
+    // 0.1s floor is below the 0.2s eligibility line
+    assert(detail.contains(
+      "\"regressions_vs_frozen\":{\"dedup_minhash\":{\"prior\":2.000,\"now\":4.000}}"))
+    assert(line.contains("\"regressions_vs_frozen\":1,"))
   }
 }

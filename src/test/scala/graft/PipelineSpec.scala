@@ -40,6 +40,31 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.option("header", "true").csv(s"$out/c").count() == 2)
   }
 
+  test("refresh skips a source that fails only at execution (corrupt file)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-pipe-corrupt")
+    val good = dir.resolve("good").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "name").write.parquet(good)
+    val bad = Files.createDirectories(dir.resolve("bad"))
+    Files.writeString(bad.resolve("part-0.parquet"), "not a parquet file")
+    val schema = spark.read.parquet(good).schema
+    val res = Pipeline.builder(spark)
+      .source("good")(_.read.schema(schema).parquet(good))
+      .source("bad")(_.read.schema(schema).parquet(bad.toString))
+      .sink("noop")(_.write.format("noop").mode("overwrite").save())
+      .refresh()
+    assert(res.recordCount == 2)
+    assert(res.failedSources == Seq("bad"))
+  }
+
+  test("refresh rethrows an execution failure no single source causes") {
+    val p = Pipeline.builder(spark)
+      .source("ok")(s => { import s.implicits._; Seq(1L, 2L).toDF("id") })
+      .transform(_.withColumn("boom", raise_error(lit("transform failed"))))
+    val e = intercept[Exception](p.refresh())
+    assert(e.getMessage.contains("transform failed"))
+  }
+
   test("report emits count / distinct / freshness") {
     import spark.implicits._
     val df = Seq((1L, "2026-01-01"), (1L, "2026-02-01"), (2L, "2026-01-15"))
