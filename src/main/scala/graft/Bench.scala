@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (count() would let Catalyst prune the computed columns away).
@@ -7,7 +9,9 @@ package graft
   * Emission contract: the LAST stdout line is a compact total-only
   * JSON record (it must fit a bounded tail capture); `value` is this
   * run's measured total. The per-query map of this run's times goes to
-  * `target/bench-detail.json`; a bench run writes nothing else.
+  * `target/bench-detail.json`, beside each query's codegen compile time
+  * in that same timed run (`codegen_ms`); a bench run writes nothing
+  * else.
   *
   * Wall-time protocol (revised round 11 — the old full-warm-up +
   * 2-measured-passes protocol scaled as 3 full passes and outgrew the
@@ -78,10 +82,11 @@ object Bench {
   /** The detail record and the compact stdout line of one run. Both
     * carry this run's measured total as `value`; the detail's
     * `queries` holds this run's time per query, failed queries only
-    * under `failed`.
+    * under `failed`, and `codegen_ms` the compile time of each query's
+    * kept run.
     */
-  private[graft] def emit(results: Seq[(String, Double)], failed: Seq[String],
-      frozen: Map[String, Double], frozenName: Option[String],
+  private[graft] def emit(results: Seq[(String, Double)], codegenMs: Seq[(String, Double)],
+      failed: Seq[String], frozen: Map[String, Double], frozenName: Option[String],
       sfDir: String): (String, String) = {
     // Locale.ROOT: the f-interpolator is locale-sensitive, and a
     // comma-decimal default locale would emit invalid JSON here.
@@ -91,14 +96,15 @@ object Bench {
     val head =
       s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec",""" +
         s""""n_queries":${results.size},"sf":${str(sfDir)},"""
-    val qs = results.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString(",")
+    def obj(kv: Seq[(String, Double)]) = kv.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString(",")
     val regJson = regs
       .map { case (n, p, s) => str(n) + ":{\"prior\":" + fmt(p) + ",\"now\":" + fmt(s) + "}" }
       .mkString("{", ",", "}")
     val detail = head +
       s""""failed":${failed.map(str).mkString("[", ",", "]")},""" +
       s""""frozen_baseline":${frozenName.map(str).getOrElse("null")},""" +
-      s""""regressions_vs_frozen":$regJson,"queries":{$qs}}"""
+      s""""regressions_vs_frozen":$regJson,"codegen_ms":{${obj(codegenMs)}},""" +
+      s""""queries":{${obj(results)}}}"""
     // the empty "queries" keeps the line's {metric,value,unit,queries}
     // shape for tail parsers; the per-query map is in the detail
     val line = head +
@@ -152,11 +158,13 @@ object Bench {
       System.err.println(f"[bench] spread $n: $rows rows in ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
 
-    def runOnce(q: QueryDef): Either[Throwable, Double] = {
+    /** (wall seconds, codegen compile ms) of one run of `q`. */
+    def runOnce(q: QueryDef): Either[Throwable, (Double, Double)] = {
+      val c0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       try {
         q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
+        Right(((System.nanoTime() - t0) / 1e9, (CodeGenerator.compileTime - c0) / 1e6))
       } catch { case e: Throwable => Left(e) }
     }
 
@@ -168,7 +176,7 @@ object Bench {
     var warmupFailures = 0
     selected.filterNot(q => frozen.contains(q.name)).foreach { q =>
       runOnce(q) match {
-        case Right(s) => System.err.println(f"[bench] warmup ${q.name}: $s%.3fs")
+        case Right((s, _)) => System.err.println(f"[bench] warmup ${q.name}: $s%.3fs")
         case Left(e) =>
           warmupFailures += 1
           System.err.println(s"[bench] WARM-UP FAILED ${q.name}: $e")
@@ -180,11 +188,11 @@ object Bench {
 
     // One measured pass. Failures are recorded by NAME, never by time.
     val failed = scala.collection.mutable.ListBuffer[String]()
-    val pass1: Seq[(QueryDef, Double)] = selected.flatMap { q =>
+    val pass1: Seq[(QueryDef, (Double, Double))] = selected.flatMap { q =>
       runOnce(q) match {
-        case Right(s) =>
+        case Right(run @ (s, _)) =>
           System.err.println(f"[bench] pass1 ${q.name}: $s%.3fs")
-          Some(q -> s)
+          Some(q -> run)
         case Left(e) =>
           failed += q.name
           System.err.println(s"[bench] FAILED ${q.name}: ${e.getMessage}")
@@ -192,28 +200,31 @@ object Bench {
       }
     }
 
-    // Targeted re-run of suspects; keeps the min of the two runs, and
-    // a failed re-run keeps the first time.
-    val results: Seq[(String, Double)] = pass1.map { case (q, s) =>
+    // Targeted re-run of suspects; keeps the faster of the two runs
+    // (its time and its compile time), and a failed re-run keeps the
+    // first.
+    val kept: Seq[(String, (Double, Double))] = pass1.map { case (q, run @ (s, _)) =>
       frozen.get(q.name) match {
         case Some(p) if exceeds(p, s) =>
           runOnce(q) match {
-            case Right(s2) =>
+            case Right(run2 @ (s2, _)) =>
               System.err.println(f"[bench] rerun ${q.name}: $s%.3fs -> $s2%.3fs (floor $p%.3fs)")
-              q.name -> math.min(s, s2)
+              q.name -> (if (s2 < s) run2 else run)
             case Left(e) =>
               System.err.println(s"[bench] RERUN FAILED ${q.name}: ${e.getMessage}")
-              q.name -> s
+              q.name -> run
           }
-        case _ => q.name -> s
+        case _ => q.name -> run
       }
     }
+    val results = kept.map { case (n, (s, _)) => n -> s }
 
     val tag = frozenFile.map(_.getName).getOrElse("frozen:none")
     regressions(results, frozen).foreach { case (name, p, s) =>
       System.err.println(f"[bench] WARN REGRESSION($tag) $name: $p%.3fs -> $s%.3fs (${s / p}%.2fx)")
     }
-    val (detail, line) = emit(results, failed.toSeq, frozen, frozenFile.map(_.getName), sfDir)
+    val (detail, line) = emit(results, kept.map { case (n, (_, c)) => n -> c },
+      failed.toSeq, frozen, frozenFile.map(_.getName), sfDir)
     new java.io.File("target").mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get("target/bench-detail.json"),
       detail.getBytes("UTF-8"))

@@ -18,11 +18,32 @@ object GraftSession {
     *     which the vectorized parquet reader otherwise rejects;
     *     [[Tables]] rebuilds the proper micros timestamp from the raw
     *     long. Must be set before the first read — hence here.
+    *   - `codegen.cache.maxEntries` 1000 (Spark's default is 100): the
+    *     compiled-class cache is keyed by (class loader, code), and in
+    *     `local[n]` every stage class compiles twice, once on the
+    *     driver (the compile check of whole-stage codegen) and once
+    *     under the executor's task loader. Guava splits the cache into
+    *     4 segments of maxEntries/4, each LRU on its own. One
+    *     etl_refresh cycle holds 93 entries (plus 8 per refresh from
+    *     its inlined ingest-timestamp literal, at most 39 cycles a
+    *     run) and one dedup_curate pass 81–95, so at 100 the segments
+    *     overflow and warm rounds recompile what the next round needs
+    *     again. 1000 holds that working set with room for a segment
+    *     that fills unevenly. A static conf: the cache is built once
+    *     per JVM, from the active session's conf when code is first
+    *     compiled, so session-build time is the only place it takes
+    *     hold.
+    *   - `codegen.useIdInClassName` false: the stage id in a generated
+    *     class's name makes identical stages different code. A refresh
+    *     unions 4 sources that share one projection; with ids they
+    *     compile as 4 classes per loader, without them as one.
     */
   val required: Map[String, String] = Map(
     "spark.sql.extensions"                  -> "graft.functions.GraftExtensions",
     "spark.sql.session.timeZone"            -> "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong"  -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong"  -> "true",
+    "spark.sql.codegen.cache.maxEntries"    -> "1000",
+    "spark.sql.codegen.useIdInClassName"    -> "false")
 
   /** `spark.graft.localSpread` — LOCAL-ONLY workaround, default off.
     *

@@ -4,6 +4,7 @@ import graft.functions.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for an LLM-training-data pipeline:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
@@ -149,25 +150,21 @@ object Dedup {
     } finally { g.unpersist(false) }
   }
 
-  /** MinHash signatures. Permutation i is a rotate-xor mix of TWO base
-    * hashes: hᵢ = rol(h1, aᵢ) ^ rol(h2, bᵢ) ^ cᵢ with h1 =
-    * xxhash64(gram), h2 = xxhash64(gram, 1) and per-i constants from a
-    * fixed seed ⇒ deterministic across runs/partitionings. Each hᵢ is a
-    * distinct full-rank GF(2)-linear image of 128 iid-uniform bits, so
-    * the mixes are uniform and pairwise independent up to one parity
-    * bit — empirically indistinguishable from independent re-hashes for
-    * min-wise use (recall floor enforced by RecallSpec). Cost: 2
-    * xxhash64 evaluations per gram + ~8 bitwise ops per permutation,
-    * vs numPerm full xxhash64 evaluations before — and every op is
-    * ANSI-safe (no multiply/add overflow, unlike Carter–Wegman).
-    * Returns (id, h0..h{numPerm-1}).
-    */
   /** (id, grams: array<string>) — the tokenize+shingle base both the
     * signature and the exact-verification paths consume. (A hashed-
     * shingle variant — token-hash arrays recombined with xxhash64
     * inside a nested lambda — was measured SLOWER than the string
     * form: interpreted HOFs box every element access, and the extra
     * allocation cost outweighs the saved string concat.)
+    *
+    * Persist it before use. An explode over the `grams` ATTRIBUTE
+    * makes the optimizer infer `size(grams) > 0 AND grams IS NOT NULL`
+    * below the Generate and push that filter through both projections,
+    * inlining the shingle expression — and the tokenizer inside its
+    * lambda — twice more per row (11 `split` calls in the optimized
+    * plan instead of 1). A persisted frame stops the push; the
+    * one-pass paths explode the shingle expression itself
+    * ([[explodedGrams]]), over which no filter is inferred.
     */
   private def gramArrays(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
     docs.select(col(id).as("id"), TextAnalysis.tokens(col(text)).as("toks"))
@@ -201,9 +198,22 @@ object Dedup {
     g.groupBy("id").agg(aggs.head, aggs.tail.toIndexedSeq: _*)
   }
 
+  /** MinHash signatures. Permutation i is a rotate-xor mix of TWO base
+    * hashes: hᵢ = rol(h1, aᵢ) ^ rol(h2, bᵢ) ^ cᵢ with h1 =
+    * xxhash64(gram), h2 = xxhash64(gram, 1) and per-i constants from a
+    * fixed seed ⇒ deterministic across runs/partitionings. Each hᵢ is a
+    * distinct full-rank GF(2)-linear image of 128 iid-uniform bits, so
+    * the mixes are uniform and pairwise independent up to one parity
+    * bit — empirically indistinguishable from independent re-hashes for
+    * min-wise use (recall floor enforced by RecallSpec). Cost: 2
+    * xxhash64 evaluations per gram + ~8 bitwise ops per permutation,
+    * vs numPerm full xxhash64 evaluations before — and every op is
+    * ANSI-safe (no multiply/add overflow, unlike Carter–Wegman).
+    * Returns (id, h0..h{numPerm-1}).
+    */
   def minhashSignatures(docs: DataFrame, id: String, text: String,
       numPerm: Int = 64, n: Int = 3): DataFrame =
-    signaturesFromGrams(gramArrays(docs, id, text, n), numPerm)
+    sigsFromGramRows(explodedGrams(docs, id, text, n), numPerm)
 
   /** All ordered pairs (a<b) from a sorted id array — in-bucket pair
     * expansion for LSH buckets, O(B²) per bucket on arrays that are
@@ -316,8 +326,12 @@ object Dedup {
     */
   def minhashVerifiedPairs(docs: DataFrame, id: String, text: String,
       minJaccard: Double = 0.8, numPerm: Int = 64, bands: Int = 16,
-      n: Int = 3): DataFrame = {
-    val grams = gramArrays(docs, id, text, n).persist()
+      n: Int = 3): DataFrame =
+    verifiedFromGrams(gramArrays(docs, id, text, n).persist(), minJaccard, numPerm, bands)
+
+  /** [[minhashVerifiedPairs]] over a persisted (id, grams) base. */
+  private def verifiedFromGrams(grams: DataFrame, minJaccard: Double,
+      numPerm: Int, bands: Int): DataFrame = {
     val cand = lshCandidatesFromSigs(signaturesFromGrams(grams, numPerm),
       numPerm, bands, maxBucket = 1000)
     verifyGramJaccard(cand, grams, minJaccard)
@@ -353,13 +367,17 @@ object Dedup {
   /** MinHash-LSH dedup: one survivor (the min id) per connected
     * component of verified near-dup pairs — transitive closure via
     * [[connectedComponents]], so A~B, B~C collapse to one doc even
-    * when A~C was never a candidate pair.
+    * when A~C was never a candidate pair. [[connectedComponents]] runs
+    * eagerly and returns checkpointed labels, so the gram cache is
+    * released before return and the call leaves no cached frame behind.
     */
   def minhashDedupSurvivors(docs: DataFrame, id: String, text: String,
       minJaccard: Double = 0.8, numPerm: Int = 64, bands: Int = 16,
-      n: Int = 3): DataFrame =
-    survivorsByCluster(docs, id,
-      minhashVerifiedPairs(docs, id, text, minJaccard, numPerm, bands, n))
+      n: Int = 3): DataFrame = {
+    val grams = gramArrays(docs, id, text, n).persist()
+    try survivorsByCluster(docs, id, verifiedFromGrams(grams, minJaccard, numPerm, bands))
+    finally { grams.unpersist(false); () }
+  }
 
   /** Per-doc token multiset with counts capped at `cap`: (id, token,
     * w). The weighted-Jaccard base frame — capping bounds the replica
@@ -615,7 +633,10 @@ object Dedup {
       labels = next
       i += 1
     }
-    labels
+    // the labels outlive this call: hand back a checkpoint (one small
+    // job over the cached frame), not a cache entry no caller releases
+    if (labels.storageLevel == StorageLevel.NONE) labels
+    else try labels.localCheckpoint(true) finally { labels.unpersist(false); () }
   }
 
   /** Cluster-aware dedup: keep one doc (the min id) per connected

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Unit coverage for Bench's dependency-free detail-file parsing (the
   * regression baseline must come ONLY from the "queries" object, never
   * from metadata keys that happen to hold numbers) and for its
-  * emission: the headline is this run's measured total.
+  * emission: the headline is this run's measured total, and each
+  * query's codegen compile time rides beside it in the detail.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -39,8 +40,9 @@ class BenchSpec extends AnyFunSuite {
 
   private val results = Seq("q1_agg" -> 0.7, "dedup_minhash" -> 4.0, "text_bm25" -> 0.3)
   private val frozen = Map("q1_agg" -> 0.5, "dedup_minhash" -> 2.0, "text_bm25" -> 0.1)
+  private val codegen = Seq("q1_agg" -> 12.5, "dedup_minhash" -> 0.0, "text_bm25" -> 3.25)
   private val (detail, line) =
-    Bench.emit(results, Seq("q7_topk"), frozen, Some("BENCH_DETAIL_r15.json"), "sf")
+    Bench.emit(results, codegen, Seq("q7_topk"), frozen, Some("BENCH_DETAIL_r15.json"), "sf")
 
   private def value(json: String): Double =
     "\"value\":([0-9.]+)".r.findFirstMatchIn(json).get.group(1).toDouble
@@ -54,6 +56,13 @@ class BenchSpec extends AnyFunSuite {
   test("emit: a lower frozen floor never replaces a measured time") {
     assert(Bench.parseFlatNumbers(detail) ===
       Map("q1_agg" -> 0.7, "dedup_minhash" -> 4.0, "text_bm25" -> 0.3))
+  }
+
+  test("emit: codegen_ms carries each query's compile time, outside the queries baseline") {
+    assert(detail.contains(
+      "\"codegen_ms\":{\"q1_agg\":12.500,\"dedup_minhash\":0.000,\"text_bm25\":3.250}"))
+    assert(!line.contains("codegen_ms"))
+    assert(Bench.parseFlatNumbers(detail).keySet === results.map(_._1).toSet)
   }
 
   test("emit: a failed query is absent from queries and listed under failed") {

@@ -53,6 +53,32 @@ class DedupSpec extends SparkSpec {
     assert(surv.contains(4L))
   }
 
+  test("minhashDedupSurvivors leaves no cached frame behind") {
+    spark.catalog.clearCache()
+    Dedup.minhashDedupSurvivors(docs, "doc_id", "text").count()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the gram frame or the component labels stayed cached")
+  }
+
+  test("MinHash signature paths tokenize once per doc, same signatures as the verified path") {
+    // a file scan, not a local relation: the optimizer would evaluate
+    // the tokenizer of a local relation away
+    val dir = java.nio.file.Files.createTempDirectory("graft-minhash").toString
+    docs.write.mode("overwrite").parquet(dir)
+    val in = spark.read.parquet(dir)
+    def splits(df: org.apache.spark.sql.DataFrame): Int =
+      "split\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString).size
+    assert(splits(Dedup.minhashSignatures(in, "doc_id", "text")) === 1)
+    assert(splits(Dedup.bandedSignatures(in, "doc_id", "text")) === 1)
+    assert(splits(Dedup.minhashLshCandidates(in, "doc_id", "text")) === 1)
+    // the verified path signs a persisted gram frame
+    val (_, banded) = Dedup.minhashPairsAndBandedSigs(in, "doc_id", "text",
+      minJaccard = 0.8, numPerm = 64, bands = 16, n = 3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    assert(rows(Dedup.bandedSignatures(in, "doc_id", "text")) === rows(banded))
+  }
+
   test("weighted minhash: Σmin/Σmax verified exactly, set-equal ≠ weight-equal") {
     import spark.implicits._
     val wdocs = Seq(
