@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import scala.util.{Failure, Success, Try}
@@ -54,11 +55,22 @@ final class Pipeline private (
   /** One batch ETL run: extract → transform → load to every sink.
     * Returns (recordCount, failedSources).
     *
+    * The transformed set is persisted and the sinks run on it first;
+    * the record count then comes from the cache they filled, with no
+    * job of its own: when every partition of the cache is loaded, the
+    * row count its builder recorded is the count (the figure the
+    * cached relation's statistics report). A cache only partly
+    * loaded (no sink, or a sink that read part of the frame) is
+    * counted over the cache. The builder counts a partition each time
+    * it is built, so the figure assumes no cached block was lost and
+    * rebuilt while the sinks ran (an executor lost on a cluster).
+    *
     * A source can also fail only at execution (a corrupt file, a path
-    * gone since planning), which aborts the count. Then each source
-    * runs alone once into the noop sink; the ones that fail are
-    * dropped and listed, and the rest load once more. If no source
-    * fails alone, the original error is rethrown.
+    * gone since planning), which aborts a sink or the count. Then each
+    * source runs alone once into the noop sink; the ones that fail
+    * are dropped and listed, and the rest load once more. If no source
+    * fails alone (a failing sink, a failing transform), the original
+    * error is rethrown.
     */
   def refresh(): Pipeline.RefreshResult = {
     val (built, failed) = build()
@@ -85,17 +97,15 @@ final class Pipeline private (
     built.map(_._2).reduce(_ unionByName _)
   }
 
-  /** Transform, count and sink; a Failure only when the count fails. */
+  /** Transform, sink and count; a Failure when a sink or the count fails. */
   private def load(built: Seq[(String, DataFrame)],
       failed: Seq[String]): Try[Pipeline.RefreshResult] = {
     val out = transforms.foldLeft(union(built))((df, f) => f(df))
     // cache: each sink re-reads the transformed set, not the sources
     val cached = out.persist()
-    try {
-      val counted = Try(cached.count())
-      // sinks run outside the Try: a failing sink is no failing source
-      counted.foreach(_ => sinks.foreach { case (_, s) => s(cached) })
-      counted.map(Pipeline.RefreshResult(_, failed))
+    try Try {
+      sinks.foreach { case (_, s) => s(cached) }
+      Pipeline.RefreshResult(Pipeline.loadedRows(cached).getOrElse(cached.count()), failed)
     } finally { cached.unpersist(); () }
   }
 
@@ -125,6 +135,16 @@ final class Pipeline private (
 
 object Pipeline {
   final case class RefreshResult(recordCount: Long, failedSources: Seq[String])
+
+  /** The row count of a persisted frame whose every cache partition is
+    * loaded, read off its cache builder; None while any partition is
+    * not (or the frame is not cached).
+    */
+  private def loadedRows(cached: DataFrame): Option[Long] =
+    cached.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.rowCountStats.value.longValue
+    }
 
   def builder(spark: SparkSession): Pipeline =
     new Pipeline(spark, Vector.empty, Vector.empty, Vector.empty)

@@ -45,15 +45,16 @@ final class Service(spark: SparkSession, pipeline: Pipeline, stageDir: String) {
       lastUpdated: Option[java.sql.Timestamp])
 
   /** Staged JSON + count + freshness; Left(error + suggestion) before
-    * the first refresh (server.js:213-218).
+    * the first refresh (server.js:213-218). Count and freshness are one
+    * aggregate, one action.
     */
   def json(tsCol: String = "last_updated"): Either[String, JsonPayload] =
     staged(spark.read.json(jsonDir)).map { df =>
       val last =
-        if (df.columns.contains(tsCol))
-          df.agg(max(col(tsCol).cast("timestamp"))).head().getAs[java.sql.Timestamp](0)
-        else null
-      JsonPayload(df.count(), df, Option(last))
+        if (df.columns.contains(tsCol)) max(col(tsCol).cast("timestamp"))
+        else lit(null).cast("timestamp")
+      val r = df.agg(count(lit(1)), last).head()
+      JsonPayload(r.getLong(0), df, Option(r.getAs[java.sql.Timestamp](1)))
     }
 
   /** Staged CSV artifact; Left(error + suggestion) before refresh. */

@@ -252,5 +252,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewriteRule)
     ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewriteRule)
+    ext.injectOptimizerRule(_ => graft.plans.SnapshotCountRewriteRule)
   }
 }

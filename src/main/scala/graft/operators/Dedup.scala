@@ -66,6 +66,9 @@ object Dedup {
     * `maxGramDf = 0` disables for exact-oracle runs. Docs sharing ONLY
     * stop-grams lose their candidate pair — by construction those have
     * jaccard < maxGramDf-docs/union, far below any useful minJaccard.
+    * The pair set is materialized on return (an eager local
+    * checkpoint) and the gram frame released, so the call leaves the
+    * session cache as it found it.
     */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
       block: String, len: String, lenBand: Int,
@@ -83,28 +86,32 @@ object Dedup {
     val g = explodedGrams(docs, id, text, n,
       Seq(col(block) -> "blk", col(len).cast(LongType) -> "len"))
       .persist()
-    val pruned =
-      if (maxGramDf > 0L) {
-        val hot = g.groupBy("gram").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxGramDf).select("gram")
-        g.join(broadcast(hot), Seq("gram"), "left_anti")
-      } else g
-    val sizes = g.groupBy("id").agg(count(lit(1)).as("sz")) // grams are distinct per doc
-    val a = pruned.select(col("blk"), col("gram"),
-      col("id").as("id_a"), col("len").as("len_a"))
-    val b = pruned.select(col("blk"), col("gram"),
-      col("id").as("id_b"), col("len").as("len_b"))
-    val inter = a.join(b, Seq("blk", "gram"))
-      .filter(col("id_a") < col("id_b") &&
-        abs(col("len_a") - col("len_b")) <= lenBand)
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(col("inter").cast(DoubleType) /
-          (col("sz_a") + col("sz_b") - col("inter")).cast(DoubleType), 6).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    try {
+      val pruned =
+        if (maxGramDf > 0L) {
+          val hot = g.groupBy("gram").agg(count(lit(1)).as("df"))
+            .filter(col("df") > maxGramDf).select("gram")
+          g.join(broadcast(hot), Seq("gram"), "left_anti")
+        } else g
+      val sizes = g.groupBy("id").agg(count(lit(1)).as("sz")) // grams are distinct per doc
+      val a = pruned.select(col("blk"), col("gram"),
+        col("id").as("id_a"), col("len").as("len_a"))
+      val b = pruned.select(col("blk"), col("gram"),
+        col("id").as("id_b"), col("len").as("len_b"))
+      val inter = a.join(b, Seq("blk", "gram"))
+        .filter(col("id_a") < col("id_b") &&
+          abs(col("len_a") - col("len_b")) <= lenBand)
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+      inter
+        .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
+        .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(col("inter").cast(DoubleType) /
+            (col("sz_a") + col("sz_b") - col("inter")).cast(DoubleType), 6).as("jaccard"))
+        .filter(col("jaccard") >= minJaccard)
+        // materialize the bounded pair set, then release the gram base
+        .localCheckpoint(true)
+    } finally { g.unpersist(false) }
   }
 
   /** Asymmetric n-gram CONTAINMENT pairs: C(A→B) = |grams(A) ∩

@@ -1247,6 +1247,16 @@ object Snapshot {
     readEntries(spark, dir, m.files, m.schema, m.tsMs, m.mapping)
   }
 
+  /** The rows a scan over `location` returns, from the manifest alone:
+    * Some(sum of the entries' row counts) for a [[SnapshotFileIndex]]
+    * whose every entry records its rows and carries no deletion
+    * vector, else None. Backs [[graft.plans.SnapshotCountRewriteRule]].
+    */
+  private[graft] def manifestRowCount(location: FileIndex): Option[Long] = location match {
+    case i: SnapshotFileIndex => i.manifestRows
+    case _ => None
+  }
+
   private[sources] def baseName(rel: String): String =
     rel.substring(rel.lastIndexOf('/') + 1)
 
@@ -1489,24 +1499,29 @@ object Snapshot {
     * [[mergeInto]]): candidate files from the manifest's key-range
     * statistics (metadata-only, no I/O), then the EXACT touched set via
     * one `_metadata.file_path` semi-join over just the candidates.
-    * Returns (touched, untouched) partitioning the snapshot's files.
+    * Returns (touched, untouched) partitioning the snapshot's files,
+    * and the row count of `changeKeys`, which rides the key-range
+    * aggregate; with no change rows nothing is touched and the
+    * semi-join is skipped.
     */
   private def touchedByKeys(spark: SparkSession, dir: String, prev: Manifest,
-      changeKeys: DataFrame, keys: Seq[String]): (Seq[FileEntry], Seq[FileEntry]) = {
+      changeKeys: DataFrame, keys: Seq[String]): (Seq[FileEntry], Seq[FileEntry], Long) = {
     // -- step 1: metadata-only candidate pruning by key-range stats --
     val keyCol = keys.head
     // manifest stats are keyed by PHYSICAL column names
     val physKeyCol = prev.mapping.getOrElse(keyCol, keyCol)
     val changeKeyType = changeKeys.schema(keyCol).dataType
-    val changeRange: Option[(String, String)] = {
-      val r = changeKeys.agg(
-        min(statExpr(StructField(keyCol, changeKeyType))).as("__mn"),
-        max(statExpr(StructField(keyCol, changeKeyType))).as("__mx")).collect()(0)
+    val r = changeKeys.agg(
+      min(statExpr(StructField(keyCol, changeKeyType))).as("__mn"),
+      max(statExpr(StructField(keyCol, changeKeyType))).as("__mx"),
+      count(lit(1)).as("__n")).collect()(0)
+    val changeRows = r.getLong(2)
+    if (changeRows == 0) return (Seq.empty, prev.files, 0L)
+    val changeRange: Option[(String, String)] =
       for {
         mn <- encodeStat(changeKeyType, r.get(0))
         mx <- encodeStat(changeKeyType, r.get(1))
       } yield (mn, mx)
-    }
     def mayContainChangedKey(e: FileEntry): Boolean = (e.stats.get(physKeyCol), changeRange) match {
       case (Some(cs), Some((cmn, cmx))) =>
         // disjoint iff file.max < changes.min or file.min > changes.max;
@@ -1550,16 +1565,28 @@ object Snapshot {
     val touched = prev.files.filter(e =>
       touchedNames.contains(e.path.substring(e.path.lastIndexOf('/') + 1)))
     val touchedPaths = touched.map(_.path).toSet
-    (touched, prev.files.filterNot(e => touchedPaths.contains(e.path)))
+    (touched, prev.files.filterNot(e => touchedPaths.contains(e.path)), changeRows)
   }
 
   def upsert(spark: SparkSession, dir: String, changes: DataFrame,
       keys: Seq[String], deleteCol: Option[String] = None,
-      batchId: Option[Long] = None, txnApp: Option[String] = None): Long = {
+      batchId: Option[Long] = None, txnApp: Option[String] = None): Long =
+    upsertChanges(spark, dir, changes, keys, deleteCol, batchId, txnApp,
+      mintEmpty = true).get
+
+  /** [[upsert]], except that with `mintEmpty` false an empty `changes`
+    * mints no version (None). Emptiness is read off the key-range
+    * aggregate the upsert runs anyway, so it costs no job of its own —
+    * the streaming CDC sink's per-batch form.
+    */
+  private[graft] def upsertChanges(spark: SparkSession, dir: String, changes: DataFrame,
+      keys: Seq[String], deleteCol: Option[String], batchId: Option[Long],
+      txnApp: Option[String], mintEmpty: Boolean): Option[Long] = {
     val prev = baseManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir — commit() first"))
     val curSchema = prev.schema
-    val (touched, untouched) = touchedByKeys(spark, dir, prev, changes, keys)
+    val (touched, untouched, changeRows) = touchedByKeys(spark, dir, prev, changes, keys)
+    if (changeRows == 0 && !mintEmpty) return None
 
     // -- schema evolution: new change columns extend the table --
     val newSchema = mergeSchemas(curSchema,
@@ -1581,12 +1608,12 @@ object Snapshot {
     val merged = graft.operators.Merge.upsert(base, changes, keys, deleteCol)
     val newFiles = writeDataFiles(spark, dir, merged, prev.constraints, newMapping,
       prev.spec)
-    commitManifest(spark, dir, "upsert", nullable(newSchema).toDDL,
+    Some(commitManifest(spark, dir, "upsert", nullable(newSchema).toDDL,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
       metrics = Map("files_rewritten" -> touched.size.toLong,
         "files_added" -> newFiles.size.toLong,
         "rows_written" -> newFiles.map(_.rows).sum),
-      mappingOverride = Some((newMapping, prev.retired)))
+      mappingOverride = Some((newMapping, prev.retired))))
   }
 
   /** Multi-clause MERGE INTO the latest version — the full ANSI/Delta
@@ -1626,8 +1653,8 @@ object Snapshot {
       case _: Merge.NotMatchedBySourceUpdate | _: Merge.NotMatchedBySourceDelete => true
       case _ => false
     }
-    val (touched, untouched) =
-      if (bySource) (prev.files, Seq.empty[FileEntry]) // table-wide by definition
+    val (touched, untouched, _) =
+      if (bySource) (prev.files, Seq.empty[FileEntry], 0L) // table-wide by definition
       else touchedByKeys(spark, dir, prev, source.select(keys.map(col): _*), keys)
     val base =
       if (touched.isEmpty)
@@ -3117,6 +3144,11 @@ private[sources] final class SnapshotFileIndex(
   override def inputFiles: Array[String] =
     entries.map(e => Snapshot.absPath(tableDir, e.path)).toArray
   override def refresh(): Unit = ()
+
+  /** See [[Snapshot.manifestRowCount]]. */
+  def manifestRows: Option[Long] =
+    if (entries.forall(e => e.rows >= 0 && e.dv.isEmpty)) Some(entries.map(_.rows).sum)
+    else None
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {

@@ -370,7 +370,9 @@ object Refresh {
 
   /** One micro-batch of [[snapshotCdcApply]]: skip if the table's
     * manifest cursor already covers `batchId`, else upsert-commit a
-    * new version recording it.
+    * new version recording it. An empty batch mints no version; the
+    * upsert reads emptiness off the key-range aggregate it runs
+    * anyway, so a non-empty batch pays no emptiness probe.
     */
   def applySnapshotCdcBatch(batch: DataFrame, batchId: Long, keys: Seq[String],
       deleteCol: Option[String], tableDir: String): Unit = {
@@ -380,16 +382,17 @@ object Refresh {
     // identity-aware skip: only THIS writer's per-app cursor counts — a
     // fresh checkpoint's batch 0 against an existing table must apply
     if (Snapshot.txnCursor(spark, tableDir, app).exists(_ >= batchId)) return
-    if (batch.isEmpty) return // nothing to merge; don't mint empty versions
     try {
       if (Snapshot.latestVersion(spark, tableDir).isEmpty) {
+        if (batch.isEmpty) return // don't mint an empty first version
         val live = deleteCol
           .map(d => batch.filter(!coalesce(col(d), lit(false))))
           .getOrElse(batch)
         Snapshot.commit(spark, tableDir,
           deleteCol.map(live.drop(_)).getOrElse(live), Some(batchId), Some(app))
       } else
-        Snapshot.upsert(spark, tableDir, batch, keys, deleteCol, Some(batchId), Some(app))
+        Snapshot.upsertChanges(spark, tableDir, batch, keys, deleteCol, Some(batchId),
+          Some(app), mintEmpty = false)
     } catch {
       // a racing twin of this query published the epoch first (zombie
       // driver during failover): already applied, skip idempotently

@@ -43,6 +43,12 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.keys.exists { case (a, b) => a == 4L || b == 4L })
   }
 
+  test("ngramJaccardPairs leaves no cached frame behind") {
+    spark.catalog.clearCache()
+    Dedup.ngramJaccardPairs(docs, "doc_id", "text", "lang", "n_chars", lenBand = 10).count()
+    assert(spark.sharedState.cacheManager.isEmpty, "the gram frame stayed cached")
+  }
+
   test("minhash LSH candidates include true near-dups, dedup keeps min-id survivor") {
     val cand = Dedup.minhashLshCandidates(docs, "doc_id", "text").collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet

@@ -1,7 +1,8 @@
 package graft
 
-import graft.api.Pipeline
+import graft.api.{Pipeline, Service}
 import graft.operators.Clean
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -63,6 +64,57 @@ class PipelineSpec extends SparkSpec {
       .transform(_.withColumn("boom", raise_error(lit("transform failed"))))
     val e = intercept[Exception](p.refresh())
     assert(e.getMessage.contains("transform failed"))
+  }
+
+  /** 10,000 ids in 8 partitions; the transform keeps 9,000. */
+  private def counted(sinks: (String, DataFrame => Unit)*) =
+    sinks.foldLeft(Pipeline.builder(spark)
+      .source("ids")(_.range(0, 10000, 1, 8).toDF("id"))
+      .transform(_.filter(col("id") % 10 =!= 0))) { case (p, (n, s)) => p.sink(n)(s) }
+
+  test("refresh count is exact when a sink reads part of the frame before writing") {
+    val out = Files.createTempDirectory("graft-pipe-count").toString
+    val res = counted(
+      "probe-then-write" -> { df => if (!df.isEmpty) df.write.mode("overwrite").parquet(s"$out/a") },
+      "limit-then-write" -> { df =>
+        assert(df.limit(3).collect().length == 3)
+        df.write.mode("overwrite").parquet(s"$out/b")
+      }).refresh()
+    assert(res == Pipeline.RefreshResult(9000L, Nil))
+    assert(spark.read.parquet(s"$out/a").count() == 9000)
+  }
+
+  test("refresh count is exact when sinks read only part of the frame, or nothing") {
+    assert(counted("peek" -> (df => assert(df.limit(3).collect().length == 3)))
+      .refresh().recordCount == 9000L)
+    assert(counted("idle" -> (_ => ())).refresh().recordCount == 9000L)
+    assert(counted().refresh().recordCount == 9000L)
+  }
+
+  test("refresh with full-writing sinks runs no job beyond the sinks' own") {
+    val out = Files.createTempDirectory("graft-pipe-jobs").toString
+    var sinkJobs = 0
+    def writing(name: String) = name -> { (df: DataFrame) =>
+      sinkJobs += jobsOf(df.write.mode("overwrite").parquet(s"$out/$name"))
+    }
+    val p = counted(writing("a"), writing("b"))
+    var res: Pipeline.RefreshResult = null
+    val all = jobsOf { res = p.refresh() }
+    assert(res.recordCount == 9000L)
+    assert(sinkJobs > 0 && all == sinkJobs, s"refresh ran $all jobs, its sinks $sinkJobs")
+  }
+
+  test("a failing sink fails the refresh and is never blamed on a source") {
+    val p = Pipeline.builder(spark)
+      .source("ok1")(s => { import s.implicits._; Seq(1L, 2L).toDF("id") })
+      .source("ok2")(s => { import s.implicits._; Seq(3L).toDF("id") })
+      .sink("broken")(df => df.select(raise_error(lit("sink down"))).write
+        .format("noop").mode("overwrite").save())
+    val e = intercept[Exception](p.refresh())
+    assert(e.getMessage.contains("sink down"))
+    val svc = new Service(spark, p, Files.createTempDirectory("graft-pipe-sink").toString)
+    val r = svc.refresh()
+    assert(r.isLeft && r.swap.toOption.get.contains("sink down"))
   }
 
   test("report emits count / distinct / freshness") {

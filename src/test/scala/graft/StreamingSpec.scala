@@ -681,6 +681,43 @@ class StreamingSpec extends SparkSpec {
     } finally sc.setLocalProperty("sql.streaming.queryId", null)
   }
 
+  test("snapshot CDC batch: emptiness rides the upsert's key-range aggregate (no probe job)") {
+    import graft.sources.Snapshot
+    import spark.implicits._
+    val root = tmp()
+    val init = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("id", "name", "score")
+    // file-backed changes: an emptiness probe over a local relation runs no job
+    val changesDir = s"$root/changes"
+    Seq((2L, "b2", 20.0, false), (3L, "c", 3.0, true), (4L, "d", 4.0, false))
+      .toDF("id", "name", "score", "is_deleted").write.parquet(changesDir)
+    val changes = spark.read.parquet(changesDir)
+    val (viaBatch, viaUpsert) = (s"$root/batch", s"$root/upsert")
+    Seq(viaBatch, viaUpsert).foreach(Snapshot.commit(spark, _, init))
+    def state(dir: String) = Snapshot.read(spark, dir).select("id", "name", "score")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+
+    val batchJobs = jobsOf(Refresh.applySnapshotCdcBatch(
+      changes, 7L, Seq("id"), Some("is_deleted"), viaBatch))
+    val upsertJobs = jobsOf(Snapshot.upsert(spark, viaUpsert, changes, Seq("id"),
+      Some("is_deleted"), Some(7L), Some("default")))
+    assert(batchJobs == upsertJobs,
+      s"the micro-batch ran $batchJobs jobs, the upsert alone $upsertJobs")
+    assert(state(viaBatch) == Set((1L, "a", 1.0), (2L, "b2", 20.0), (4L, "d", 4.0)))
+    assert(state(viaBatch) == state(viaUpsert))
+
+    // an empty batch mints no version; the public upsert still does
+    val empty = changes.filter(lit(false))
+    val v = Snapshot.latestVersion(spark, viaBatch).get
+    Refresh.applySnapshotCdcBatch(empty, 8L, Seq("id"), Some("is_deleted"), viaBatch)
+    assert(Snapshot.latestVersion(spark, viaBatch).get == v)
+    val u = Snapshot.latestVersion(spark, viaUpsert).get
+    assert(Snapshot.upsert(spark, viaUpsert, empty, Seq("id"), Some("is_deleted")) == u + 1)
+    assert(state(viaUpsert) == state(viaBatch))
+    // the first-commit path keeps its own emptiness check
+    Refresh.applySnapshotCdcBatch(empty, 0L, Seq("id"), Some("is_deleted"), s"$root/fresh")
+    assert(Snapshot.latestVersion(spark, s"$root/fresh").isEmpty)
+  }
+
   test("exactly-once snapshot APPEND sink: each batch is one O(batch) append version; replay is a no-op; optimize folds the ingest tail") {
     import graft.sources.Snapshot
     import spark.implicits._
