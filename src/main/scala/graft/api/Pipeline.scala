@@ -55,22 +55,28 @@ final class Pipeline private (
   /** One batch ETL run: extract → transform → load to every sink.
     * Returns (recordCount, failedSources).
     *
-    * The transformed set is persisted and the sinks run on it first;
-    * the record count then comes from the cache they filled, with no
-    * job of its own: when every partition of the cache is loaded, the
-    * row count its builder recorded is the count (the figure the
-    * cached relation's statistics report). A cache only partly
-    * loaded (no sink, or a sink that read part of the frame) is
-    * counted over the cache. The builder counts a partition each time
-    * it is built, so the figure assumes no cached block was lost and
-    * rebuilt while the sinks ran (an executor lost on a cluster).
+    * The transformed set is persisted and filled by one pass into the
+    * noop sink before any sink runs, so an execution failure (a
+    * corrupt source, a transform that fails on some row) surfaces
+    * before a sink has overwritten its previous output. The record
+    * count then comes from that pass, with no job of its own: the row
+    * count the cache builder recorded (the figure the cached
+    * relation's statistics report), read before any sink could make
+    * the cache rebuild a lost block and count it twice. That figure is
+    * an accumulator updated as blocks are built, which a retried task
+    * can leave short: the retry reads the block a failed attempt
+    * stored instead of rebuilding it. So it is used only when no task
+    * can be retried (a `local` or `local[n]` master) or when
+    * `spark.rdd.cache.visibilityTracking.enabled` makes a retry
+    * rebuild the block; otherwise the loaded cache is counted.
     *
     * A source can also fail only at execution (a corrupt file, a path
-    * gone since planning), which aborts a sink or the count. Then each
-    * source runs alone once into the noop sink; the ones that fail
-    * are dropped and listed, and the rest load once more. If no source
-    * fails alone (a failing sink, a failing transform), the original
-    * error is rethrown.
+    * gone since planning), which aborts the fill. Then each source
+    * runs alone once into the noop sink; the ones that fail are
+    * dropped and listed, and the rest load once more. If no source
+    * fails alone (a failing transform), the original error is
+    * rethrown. A failing sink runs on the filled cache and fails the
+    * refresh; it is never blamed on a source.
     */
   def refresh(): Pipeline.RefreshResult = {
     val (built, failed) = build()
@@ -97,15 +103,22 @@ final class Pipeline private (
     built.map(_._2).reduce(_ unionByName _)
   }
 
-  /** Transform, sink and count; a Failure when a sink or the count fails. */
+  /** Transform, fill, count and sink; a Failure only when the fill or
+    * the count fails.
+    */
   private def load(built: Seq[(String, DataFrame)],
       failed: Seq[String]): Try[Pipeline.RefreshResult] = {
     val out = transforms.foldLeft(union(built))((df, f) => f(df))
     // cache: each sink re-reads the transformed set, not the sources
     val cached = out.persist()
-    try Try {
-      sinks.foreach { case (_, s) => s(cached) }
-      Pipeline.RefreshResult(Pipeline.loadedRows(cached).getOrElse(cached.count()), failed)
+    try {
+      val counted = Try {
+        cached.write.format("noop").mode("overwrite").save()
+        Pipeline.loadedRows(cached).getOrElse(cached.count())
+      }
+      // sinks run outside the Try: a failing sink is no failing source
+      counted.foreach(_ => sinks.foreach { case (_, s) => s(cached) })
+      counted.map(Pipeline.RefreshResult(_, failed))
     } finally { cached.unpersist(); () }
   }
 
@@ -138,13 +151,32 @@ object Pipeline {
 
   /** The row count of a persisted frame whose every cache partition is
     * loaded, read off its cache builder; None while any partition is
-    * not (or the frame is not cached).
+    * not, when the frame is not cached, or when a retried task could
+    * have left the builder's count short (see [[Pipeline.refresh]]).
     */
-  private def loadedRows(cached: DataFrame): Option[Long] =
-    cached.queryExecution.withCachedData.collectFirst {
+  private def loadedRows(cached: DataFrame): Option[Long] = {
+    val sc = cached.sparkSession.sparkContext
+    if (!cacheCountExact(sc.master,
+        sc.getConf.getBoolean("spark.rdd.cache.visibilityTracking.enabled", false))) None
+    else cached.queryExecution.withCachedData.collectFirst {
       case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
         r.cacheBuilder.rowCountStats.value.longValue
     }
+  }
+
+  /** Whether a cache builder's row count is exact on this master: no
+    * task is ever retried (`local` and `local[n]` allow one attempt;
+    * `local[n, f]` allows f), or a retry rebuilds the block it counts.
+    */
+  private[graft] def cacheCountExact(master: String, visibilityTracking: Boolean): Boolean =
+    visibilityTracking || (master match {
+      case "local" | SingleAttempt(_) => true
+      case Attempts(_, f)             => f.toInt == 1
+      case _                          => false
+    })
+
+  private val SingleAttempt = """local\[([0-9]+|\*)\]""".r
+  private val Attempts      = """local\[([0-9]+|\*)\s*,\s*([0-9]+)\]""".r
 
   def builder(spark: SparkSession): Pipeline =
     new Pipeline(spark, Vector.empty, Vector.empty, Vector.empty)

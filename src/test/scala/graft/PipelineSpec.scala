@@ -2,6 +2,7 @@ package graft
 
 import graft.api.{Pipeline, Service}
 import graft.operators.Clean
+import graft.sources.Writers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -91,7 +92,7 @@ class PipelineSpec extends SparkSpec {
     assert(counted().refresh().recordCount == 9000L)
   }
 
-  test("refresh with full-writing sinks runs no job beyond the sinks' own") {
+  test("refresh with full-writing sinks runs one job beyond the sinks' own: the fill") {
     val out = Files.createTempDirectory("graft-pipe-jobs").toString
     var sinkJobs = 0
     def writing(name: String) = name -> { (df: DataFrame) =>
@@ -101,7 +102,42 @@ class PipelineSpec extends SparkSpec {
     var res: Pipeline.RefreshResult = null
     val all = jobsOf { res = p.refresh() }
     assert(res.recordCount == 9000L)
-    assert(sinkJobs > 0 && all == sinkJobs, s"refresh ran $all jobs, its sinks $sinkJobs")
+    assert(sinkJobs > 0 && all == sinkJobs + 1, s"refresh ran $all jobs, its sinks $sinkJobs")
+  }
+
+  test("a refresh that fails at execution leaves the previous staged output in place") {
+    val stage = Files.createTempDirectory("graft-pipe-stage").toString
+    // a range, not a local relation: the optimizer would fold the
+    // failing row's raise_error at planning, before any write starts
+    def svc(rows: Long, failing: Boolean) = new Service(spark, Pipeline.builder(spark)
+      .source("ids")(_.range(1, rows + 1, 1, 2).toDF("id"))
+      .transform(df => if (!failing) df
+        else df.withColumn("id", when(col("id") > 2, raise_error(lit("bad row"))).otherwise(col("id"))))
+      .sink("json")(df => Writers.json(df, s"$stage/json"))
+      .sink("csv")(df => Writers.csv(df, s"$stage/csv")), stage)
+    assert(svc(2L, failing = false).refresh() == Right(Pipeline.RefreshResult(2L, Nil)))
+    val broken = svc(3L, failing = true)
+    val r = broken.refresh()
+    assert(r.isLeft && r.swap.toOption.get.contains("bad row"))
+    assert(broken.json().map(_.count) == Right(2L))
+    assert(broken.csv().map(_.count()) == Right(2L))
+  }
+
+  test("the cache builder's row count is trusted only where no task is retried") {
+    assert(Pipeline.cacheCountExact("local", visibilityTracking = false))
+    assert(Pipeline.cacheCountExact("local[4]", visibilityTracking = false))
+    assert(Pipeline.cacheCountExact("local[*]", visibilityTracking = false))
+    assert(Pipeline.cacheCountExact("local[4, 1]", visibilityTracking = false))
+    assert(!Pipeline.cacheCountExact("local[4,2]", visibilityTracking = false))
+    assert(!Pipeline.cacheCountExact("local-cluster[2,1,1024]", visibilityTracking = false))
+    assert(!Pipeline.cacheCountExact("spark://host:7077", visibilityTracking = false))
+    assert(Pipeline.cacheCountExact("yarn", visibilityTracking = true))
+    // the premise on this spec's own master: a failed task is not retried
+    assert(Pipeline.cacheCountExact(spark.sparkContext.master, visibilityTracking = false))
+    val e = intercept[Exception](spark.sparkContext.parallelize(1 to 2, 2).map { x =>
+      if (org.apache.spark.TaskContext.get.attemptNumber == 0) sys.error("first attempt") else x
+    }.collect())
+    assert(e.getMessage.contains("first attempt"))
   }
 
   test("a failing sink fails the refresh and is never blamed on a source") {
