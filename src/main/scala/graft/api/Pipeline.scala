@@ -1,7 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.util.{Failure, Success, Try}
@@ -59,16 +58,10 @@ final class Pipeline private (
     * noop sink before any sink runs, so an execution failure (a
     * corrupt source, a transform that fails on some row) surfaces
     * before a sink has overwritten its previous output. The record
-    * count then comes from that pass, with no job of its own: the row
-    * count the cache builder recorded (the figure the cached
-    * relation's statistics report), read before any sink could make
-    * the cache rebuild a lost block and count it twice. That figure is
-    * an accumulator updated as blocks are built, which a retried task
-    * can leave short: the retry reads the block a failed attempt
-    * stored instead of rebuilding it. So it is used only when no task
-    * can be retried (a `local` or `local[n]` master) or when
-    * `spark.rdd.cache.visibilityTracking.enabled` makes a retry
-    * rebuild the block; otherwise the loaded cache is counted.
+    * count is observed on that pass, with no job of its own: observed
+    * metrics are merged once per partition from the result stage's
+    * successful tasks, never from a failed attempt, so the count is
+    * exact on every master.
     *
     * A source can also fail only at execution (a corrupt file, a path
     * gone since planning), which aborts the fill. Then each source
@@ -103,8 +96,8 @@ final class Pipeline private (
     built.map(_._2).reduce(_ unionByName _)
   }
 
-  /** Transform, fill, count and sink; a Failure only when the fill or
-    * the count fails.
+  /** Transform, fill and count in one pass, then sink; a Failure only
+    * when that pass fails.
     */
   private def load(built: Seq[(String, DataFrame)],
       failed: Seq[String]): Try[Pipeline.RefreshResult] = {
@@ -112,9 +105,11 @@ final class Pipeline private (
     // cache: each sink re-reads the transformed set, not the sources
     val cached = out.persist()
     try {
+      val rows = Observation()
       val counted = Try {
-        cached.write.format("noop").mode("overwrite").save()
-        Pipeline.loadedRows(cached).getOrElse(cached.count())
+        cached.observe(rows, count(lit(1)).as("n"))
+          .write.format("noop").mode("overwrite").save()
+        rows.get("n").asInstanceOf[Long]
       }
       // sinks run outside the Try: a failing sink is no failing source
       counted.foreach(_ => sinks.foreach { case (_, s) => s(cached) })
@@ -148,35 +143,6 @@ final class Pipeline private (
 
 object Pipeline {
   final case class RefreshResult(recordCount: Long, failedSources: Seq[String])
-
-  /** The row count of a persisted frame whose every cache partition is
-    * loaded, read off its cache builder; None while any partition is
-    * not, when the frame is not cached, or when a retried task could
-    * have left the builder's count short (see [[Pipeline.refresh]]).
-    */
-  private def loadedRows(cached: DataFrame): Option[Long] = {
-    val sc = cached.sparkSession.sparkContext
-    if (!cacheCountExact(sc.master,
-        sc.getConf.getBoolean("spark.rdd.cache.visibilityTracking.enabled", false))) None
-    else cached.queryExecution.withCachedData.collectFirst {
-      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
-        r.cacheBuilder.rowCountStats.value.longValue
-    }
-  }
-
-  /** Whether a cache builder's row count is exact on this master: no
-    * task is ever retried (`local` and `local[n]` allow one attempt;
-    * `local[n, f]` allows f), or a retry rebuilds the block it counts.
-    */
-  private[graft] def cacheCountExact(master: String, visibilityTracking: Boolean): Boolean =
-    visibilityTracking || (master match {
-      case "local" | SingleAttempt(_) => true
-      case Attempts(_, f)             => f.toInt == 1
-      case _                          => false
-    })
-
-  private val SingleAttempt = """local\[([0-9]+|\*)\]""".r
-  private val Attempts      = """local\[([0-9]+|\*)\s*,\s*([0-9]+)\]""".r
 
   def builder(spark: SparkSession): Pipeline =
     new Pipeline(spark, Vector.empty, Vector.empty, Vector.empty)

@@ -706,7 +706,7 @@ object Snapshot {
     */
   /** `cluster = false` (compact/optimize): the caller owns the layout
     * — its repartition/range/z-order choice must not be re-shuffled by
-    * the partition clustering below.
+    * [[clusterByPartitions]].
     */
   private def writeDataFiles(spark: SparkSession, dir: String, df: DataFrame,
       constraints: Map[String, String] = Map.empty,
@@ -715,22 +715,8 @@ object Snapshot {
       cluster: Boolean = true): Seq[FileEntry] = {
     val commitId = java.util.UUID.randomUUID().toString
     val rel = s"$DataDir/$commitId"
-    // identity partitioning: CLUSTER the batch by the partition columns
-    // (one hash shuffle over this commit's rows, never the table) so
-    // each written file holds few partition values and the always-
-    // collected partition-column stats make partition predicates prune
-    // at planning time — file-level value clustering instead of a
-    // directory-per-value layout
-    val present = spec.partitionCols.filter(df.columns.contains)
-    val clustered =
-      if (!cluster || present.isEmpty || present.size != spec.partitionCols.size) df
-      // explicit count: AQE coalesces a bare repartition(cols) down to
-      // one partition on small batches, which would defeat the
-      // value-per-file layout the partition stats depend on
-      else df.repartition(spark.sessionState.conf.numShufflePartitions,
-        present.map(col): _*)
     // files always carry PHYSICAL names; `df` arrives logical
-    val dfPhys = toPhysical(clustered, mapping)
+    val dfPhys = toPhysical(if (cluster) clusterByPartitions(spark, df, spec) else df, mapping)
     dfPhys.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
     val entries = collectEntries(spark, s"$dir/$rel", rel, dfPhys.schema,
       physSpec(spec, mapping))
@@ -738,6 +724,25 @@ object Snapshot {
       validateWritten(spark, dir, rel, dfPhys.schema,
         df.schema.fieldNames.toSeq, constraints)
     entries
+  }
+
+  /** Identity partitioning: `df` CLUSTERED by the spec's partition
+    * columns (one hash shuffle over this commit's rows, never the
+    * table) so each written file holds few partition values and the
+    * always-collected partition-column stats make partition predicates
+    * prune at planning time — file-level value clustering instead of a
+    * directory-per-value layout. `df` unchanged unless it carries every
+    * partition column.
+    */
+  private def clusterByPartitions(spark: SparkSession, df: DataFrame,
+      spec: TableSpec): DataFrame = {
+    val present = spec.partitionCols.filter(df.columns.contains)
+    if (present.isEmpty || present.size != spec.partitionCols.size) df
+    // explicit count: AQE coalesces a bare repartition(cols) down to
+    // one partition on small batches, which would defeat the
+    // value-per-file layout the partition stats depend on
+    else df.repartition(spark.sessionState.conf.numShufflePartitions,
+      present.map(col): _*)
   }
 
   /** Stage `df` as immutable data files under `dir`'s data/ WITHOUT
@@ -750,11 +755,7 @@ object Snapshot {
   private[sources] def stageDataFiles(spark: SparkSession, dir: String,
       df: DataFrame, spec: TableSpec): (String, Seq[FileEntry]) = {
     val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
-    val present = spec.partitionCols.filter(df.columns.contains)
-    val clustered =
-      if (present.isEmpty || present.size != spec.partitionCols.size) df
-      else df.repartition(spark.sessionState.conf.numShufflePartitions,
-        present.map(col): _*)
+    val clustered = clusterByPartitions(spark, df, spec)
     clustered.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
     (rel, collectEntries(spark, s"$dir/$rel", rel, clustered.schema, spec))
   }
@@ -1051,6 +1052,11 @@ object Snapshot {
   private def baseManifest(spark: SparkSession, dir: String): Option[Manifest] =
     latestVersion(spark, dir).map(readManifest(spark, dir, _))
 
+  /** The latest committed manifest; fails on a table with none. */
+  private def latest(spark: SparkSession, dir: String): Manifest =
+    baseManifest(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed version at $dir"))
+
   /** Manifest schemas are stored all-nullable — the same semantics
     * `spark.read.parquet` infers for any parquet table, and a
     * requirement for schema evolution: the vectorized reader refuses
@@ -1168,8 +1174,7 @@ object Snapshot {
     * must exist in the current schema.
     */
   def setTableSpec(spark: SparkSession, dir: String, spec: TableSpec): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val names = prev.schema.fieldNames.toSet
     val unknown = (spec.partitionCols ++ spec.statsCols ++ spec.bloomCols)
       .filterNot(names.contains).distinct
@@ -1331,17 +1336,84 @@ object Snapshot {
     val (dved, clean) = entries.partition(_.dv.isDefined)
     val cleanDf = scanEntries(spark, dir, clean, phys, tsMs)
     if (dved.isEmpty) return toLogical(cleanDf)
-    val dvDirs = dved.flatMap(_.dv.map(_.path)).distinct
-    val dv = spark.read.parquet(dvDirs.map(d => absPath(dir, d)): _*)
-    val scanned = scanEntries(spark, dir, dved, phys, tsMs)
-      .withColumn("__gf", element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__gp", col("_metadata.row_index"))
-    val alive = scanned.join(dv,
-        scanned("__gf") === dv("__dv_file") && scanned("__gp") === dv("__dv_pos"),
-        "left_anti")
+    val alive = withoutDeleted(spark, dir, dved,
+        scanEntries(spark, dir, dved, phys, tsMs), "_metadata")
       .drop("__gf", "__gp")
     toLogical(if (clean.isEmpty) alive else cleanDf.unionByName(alive))
   }
+
+  /** A deletion-vector dataset's rows: deleted (file basename, row
+    * index) pairs. Read with this schema rather than an inferred one,
+    * which would cost a job per read.
+    */
+  private val DvSchema = "__dv_file STRING, __dv_pos BIGINT"
+
+  private def readDvs(spark: SparkSession, dir: String, rels: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(rels.distinct.map(absPath(dir, _)): _*)
+
+  /** `scanned` with each row's file basename (`__gf`) and row index
+    * (`__gp`), read off its metadata struct column `meta`, minus the
+    * rows the deletion vectors of `entries` already deleted: one left
+    * anti join against their dv datasets, none when no entry has one.
+    */
+  private def withoutDeleted(spark: SparkSession, dir: String, entries: Seq[FileEntry],
+      scanned: DataFrame, meta: String): DataFrame = {
+    val positioned = scanned
+      .withColumn("__gf", element_at(split(col(s"$meta.file_path"), "/"), -1))
+      .withColumn("__gp", col(s"$meta.row_index"))
+    val dvRels = entries.flatMap(_.dv.map(_.path))
+    if (dvRels.isEmpty) positioned
+    else {
+      val dv = readDvs(spark, dir, dvRels)
+      positioned.join(dv, positioned("__gf") === dv("__dv_file") &&
+        positioned("__gp") === dv("__dv_pos"), "left_anti")
+    }
+  }
+
+  /** `entries` read under `m`'s LOGICAL column names, with the scan's
+    * `_metadata` struct carried as `__meta`. Files carry physical
+    * names: the relabel is a pure projection of aliases, so a filter
+    * on logical names still pushes down to the scan, and columns a
+    * caller does not select are pruned from it.
+    */
+  private def labelledScan(spark: SparkSession, dir: String, m: Manifest,
+      entries: Seq[FileEntry]): DataFrame =
+    spark.read.schema(physicalSchema(m.schema, m.mapping))
+      .parquet(entries.map(e => absPath(dir, e.path)): _*)
+      .select(m.schema.fields.toSeq.map(f =>
+        col(m.mapping.getOrElse(f.name, f.name)).as(f.name)) :+
+        col("_metadata").as("__meta"): _*)
+
+  /** The row-level writers' one scan: the LIVE rows of `entries` under
+    * `m`'s logical names, each with its `__gf`/`__gp` position.
+    */
+  private def positionedScan(spark: SparkSession, dir: String, m: Manifest,
+      entries: Seq[FileEntry]): DataFrame =
+    withoutDeleted(spark, dir, entries, labelledScan(spark, dir, m, entries), "__meta")
+
+  /** The entries of `m` whose manifest statistics do not prove that
+    * `condition` (on logical names) cannot match: the read path's own
+    * pruning, metadata only. The condition is resolved through a scan
+    * of `m`, where the optimizer pushes it below the logical-rename
+    * projection, so it references the PHYSICAL attributes the stats
+    * are keyed by (an unpushable condition stays logical and simply
+    * prunes nothing).
+    */
+  private def statsCandidates(spark: SparkSession, dir: String, m: Manifest,
+      condition: Column): Seq[FileEntry] = {
+    val resolved = readEntries(spark, dir, m.files, m.schema, m.tsMs, m.mapping)
+      .filter(condition).queryExecution.optimizedPlan.collect {
+        case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
+      }
+    val names = new SnapshotFileIndex(dir, m.files,
+        physicalSchema(m.schema, m.mapping), m.tsMs)
+      .listFiles(Nil, resolved).flatMap(_.files.map(_.getPath.getName)).toSet
+    m.files.filter(e => names.contains(baseName(e.path)))
+  }
+
+  /** Rows of `df` per value of its string column `c`. */
+  private def countsBy(df: DataFrame, c: String): Map[String, Long] =
+    df.groupBy(col(c)).count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Read the latest committed version. */
   def read(spark: SparkSession, dir: String): DataFrame =
@@ -1403,8 +1475,7 @@ object Snapshot {
     */
   private[sources] def appendEntries(spark: SparkSession, dir: String,
       entries: Seq[FileEntry], batchId: Long, txnApp: String): Option[Long] = {
-    val base = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val base = latest(spark, dir)
     if (base.txns.get(txnApp).exists(_ >= batchId))
       return None // replayed epoch: already committed, skip idempotently
     try Some(commitManifest(spark, dir, "append", base.schemaDdl,
@@ -1543,15 +1614,11 @@ object Snapshot {
     val candidates = prev.files.filter(mayContainChangedKey)
 
     // -- step 2: exact touched set via _metadata over candidates only --
-    val curSchema = prev.schema
     val touchedNames: Set[String] =
       if (candidates.isEmpty) Set.empty
       else {
-        val cur = spark.read.schema(physicalSchema(curSchema, prev.mapping))
-          .parquet(candidates.map(e => absPath(dir, e.path)): _*)
-        cur.select(keys.map(k =>
-            col(prev.mapping.getOrElse(k, k)).as(k)) :+
-            col("_metadata.file_path").as("__fp"): _*)
+        labelledScan(spark, dir, prev, candidates)
+          .select(keys.map(col) :+ col("__meta.file_path").as("__fp"): _*)
           .join(changeKeys.select(keys.map(col): _*).distinct(), keys, "left_semi")
           .select(col("__fp")).distinct()
           .collect().map(r => { val p = r.getString(0); p.substring(p.lastIndexOf('/') + 1) })
@@ -1582,8 +1649,7 @@ object Snapshot {
   private[graft] def upsertChanges(spark: SparkSession, dir: String, changes: DataFrame,
       keys: Seq[String], deleteCol: Option[String], batchId: Option[Long],
       txnApp: Option[String], mintEmpty: Boolean): Option[Long] = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir — commit() first"))
+    val prev = latest(spark, dir)
     val curSchema = prev.schema
     val (touched, untouched, changeRows) = touchedByKeys(spark, dir, prev, changes, keys)
     if (changeRows == 0 && !mintEmpty) return None
@@ -1646,8 +1712,7 @@ object Snapshot {
       keys: Seq[String], clauses: Seq[graft.operators.Merge.MergeClause],
       batchId: Option[Long] = None, txnApp: Option[String] = None): Long = {
     import graft.operators.Merge
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir — commit() first"))
+    val prev = latest(spark, dir)
     val curSchema = prev.schema
     val bySource = clauses.exists {
       case _: Merge.NotMatchedBySourceUpdate | _: Merge.NotMatchedBySourceDelete => true
@@ -1677,8 +1742,8 @@ object Snapshot {
     *   1. metadata-only — files whose manifest statistics prove the
     *      predicate cannot match carry over untouched (the same
     *      evaluator the read path's data skipping uses);
-    *   2. one scan over the surviving candidates records each matching
-    *      row's (file, position) into a deletion-vector parquet
+    *   2. one dv-aware scan over the surviving candidates records each
+    *      matching LIVE row's (file, position) into a deletion-vector parquet
     *      dataset — O(candidate files) I/O, O(matched rows) output,
     *      ZERO data-file rewrites (compare [[upsert]]'s copy-on-write,
     *      which rewrites every touched file: a delete of 100 rows
@@ -1693,137 +1758,96 @@ object Snapshot {
     * Readers apply dvs as one anti join ([[readEntries]]); versions
     * before the delete still read every row (time travel unaffected);
     * [[upsert]]/[[compact]]/[[optimize]] materialize dvs away when
-    * they rewrite. Returns None (no version minted) when nothing
-    * matched — a cron'd retention delete converges like [[optimize]].
+    * they rewrite. Returns None (no version minted) when no live row
+    * matched — a cron'd retention delete converges like [[optimize]]:
+    * its re-run re-matches only rows already deleted.
     */
   def deleteWhere(spark: SparkSession, dir: String, condition: Column,
       batchId: Option[Long] = None, txnApp: Option[String] = None): Option[Long] = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
-    val schema = prev.schema
-    val f = fs(spark, dir)
-
-    // -- step 1: metadata-only candidate pruning via the read path's
-    //    own stats evaluator (resolve the predicate against the scan) --
-    // the optimizer pushes the filter below readVersion's logical-
-    // rename projection, so the collected condition references
-    // PHYSICAL attributes — matching the physical-keyed manifest stats
-    // (an unpushable condition stays logical and simply prunes nothing)
-    val resolved = readVersion(spark, dir, prev.version).filter(condition)
-      .queryExecution.optimizedPlan.collect {
-        case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
-      }
-    val index = new SnapshotFileIndex(dir, prev.files,
-      physicalSchema(schema, prev.mapping), prev.tsMs)
-    val candNames = index.listFiles(Nil, resolved)
-      .flatMap(_.files.map(_.getPath.getName)).toSet
-    val candidates = prev.files.filter(e => candNames.contains(baseName(e.path)))
+    val prev = latest(spark, dir)
+    // -- step 1: metadata-only candidate pruning --
+    val candidates = statsCandidates(spark, dir, prev, condition)
     if (candidates.isEmpty) return None
-
-    // -- step 2: one scan, matched (file, pos) pairs straight to disk.
-    //    Rows an existing dv already deleted may re-match; the union
-    //    below dedupes them, so no dv pre-filter is needed here. --
-    //    `condition` references LOGICAL names: scan physical, relabel
-    //    logical, and carry the metadata struct through the projection.
-    val candPhys = spark.read.schema(physicalSchema(schema, prev.mapping))
-      .parquet(candidates.map(e => absPath(dir, e.path)): _*)
-    val cand = candPhys.select(schema.fields.toSeq.map(f =>
-        col(prev.mapping.getOrElse(f.name, f.name)).as(f.name)) :+
-        col("_metadata").as("__meta"): _*)
-    val matched = cand.filter(condition)
-      .select(element_at(split(col("__meta.file_path"), "/"), -1).as("__dv_file"),
-        col("__meta.row_index").as("__dv_pos"))
-    val rel1 = s"$DataDir/${java.util.UUID.randomUUID()}"
-    matched.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel1")
-    val m1 = spark.read.parquet(s"$dir/$rel1")
-    val newCounts: Map[String, Long] = m1.groupBy(col("__dv_file")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (newCounts.isEmpty) { f.delete(new Path(s"$dir/$rel1"), true); return None }
-    val touchedNames = newCounts.keySet
-    val needMerge = candidates.filter(e =>
-      e.dv.isDefined && touchedNames.contains(baseName(e.path)))
-
-    // -- step 3: merge prior dvs of re-deleted files so every entry
-    //    references ONE complete dv dataset --
-    val (finalRel, finalDv) = if (needMerge.isEmpty) (rel1, m1) else {
-      import spark.implicits._
-      val names = needMerge.map(e => baseName(e.path)).toDF("__dv_file")
-      val old = spark.read.parquet(needMerge.flatMap(_.dv.map(d => absPath(dir, d.path))).distinct: _*)
-        .join(names, Seq("__dv_file"), "left_semi")
-      val rel2 = s"$DataDir/${java.util.UUID.randomUUID()}"
-      m1.unionByName(old).distinct().write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel2")
-      f.delete(new Path(s"$dir/$rel1"), true)
-      (rel2, spark.read.parquet(s"$dir/$rel2"))
-    }
-    val totals: Map[String, Long] = finalDv.groupBy(col("__dv_file")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val files = prev.files.flatMap { e =>
-      val name = baseName(e.path)
-      if (!touchedNames.contains(name)) Some(e)
-      else {
-        val deleted = totals(name)
-        if (e.rows >= 0 && deleted >= e.rows) None // whole file dead: drop it
-        else Some(e.copy(dv = Some(DvRef(finalRel, deleted))))
-      }
-    }
-    // every touched file fully dropped → the dv dataset is unreferenced
-    if (!files.exists(_.dv.exists(_.path == finalRel)))
-      f.delete(new Path(s"$dir/$finalRel"), true)
-    val prevDeleted: Map[String, Long] = prev.files
-      .map(e => baseName(e.path) -> e.dv.map(_.deleted).getOrElse(0L)).toMap
-    Some(commitManifest(spark, dir, "delete", prev.schemaDdl, files,
-      batchId, txnApp, Some(prev),
+    // -- step 2: one dv-aware scan, matched live (file, pos) pairs
+    //    straight to disk; the per-file counts come from what it wrote --
+    val (rel, counts) = writeDv(spark, dir,
+      positionedScan(spark, dir, prev, candidates).filter(condition)
+        .select(col("__gf").as("__dv_file"), col("__gp").as("__dv_pos")), Nil)
+    val f = fs(spark, dir)
+    if (counts.isEmpty) { f.delete(new Path(s"$dir/$rel"), true); return None }
+    // -- step 3: fates; a partial file's prior dv merges into a new one --
+    val (_, dead, partial) = fates(prev.files, counts)
+    val dv =
+      if (partial.isEmpty) None
+      else if (partial.forall(_.dv.isEmpty)) Some((rel, counts))
+      else Some(writeDv(spark, dir, readDvs(spark, dir, Seq(rel)), partial))
+    // every touched file fully dropped, or merged: `rel` is unreferenced
+    if (!dv.exists(_._1 == rel)) f.delete(new Path(s"$dir/$rel"), true)
+    Some(commitManifest(spark, dir, "delete", prev.schemaDdl,
+      withDv(prev.files, dead, dv), batchId, txnApp, Some(prev),
       metrics = Map(
-        "rows_deleted" -> touchedNames.toSeq
-          .map(n => totals(n) - prevDeleted.getOrElse(n, 0L)).sum,
-        "files_dropped" -> (prev.files.size - files.size).toLong,
-        "files_dv" -> files.count(_.dv.exists(_.path == finalRel)).toLong)))
+        "rows_deleted" -> counts.values.sum,
+        "files_dropped" -> dead.size.toLong,
+        "files_dv" -> partial.size.toLong)))
   }
 
-  /** Shared predicate narrowing for the row-level writers
-    * ([[updateWhere]] / [[replaceWhere]]): metadata-only candidate
-    * pruning through the read path's own stats evaluator, then ONE
-    * dv-aware scan of the candidates counting the LIVE rows
-    * `condition` matches per file. Rows an existing deletion vector
-    * already removed are anti-joined out BEFORE the match test — a
-    * dead row must neither force a rewrite nor miscount a full-file
-    * drop. Returns (candidate entries, matched-live-rows per file
-    * basename); both driver-side structures are O(files), never rows.
+  /** Write the deletion vector holding `pairs` (`__dv_file`,
+    * `__dv_pos`) merged with the prior dv positions of `merge`, so each
+    * of those entries references ONE complete dv. Returns the dv's
+    * table-relative path and its deleted positions per file basename.
+    */
+  private def writeDv(spark: SparkSession, dir: String, pairs: DataFrame,
+      merge: Seq[FileEntry]): (String, Map[String, Long]) = {
+    import spark.implicits._
+    val dved = merge.filter(_.dv.isDefined)
+    val merged = if (dved.isEmpty) pairs else {
+      val names = dved.map(e => baseName(e.path)).toDF("__dv_file")
+      pairs.unionByName(readDvs(spark, dir, dved.flatMap(_.dv.map(_.path)))
+        .join(names, Seq("__dv_file"), "left_semi")).distinct()
+    }
+    val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
+    merged.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
+    (rel, countsBy(readDvs(spark, dir, Seq(rel)), "__dv_file"))
+  }
+
+  private def liveRows(e: FileEntry): Long = e.rows - e.dv.map(_.deleted).getOrElse(0L)
+
+  /** The fate of each of `files` under a row-level write that matched
+    * `counts` live rows per file basename: (carried — no match, dead —
+    * every live row matched, partial — the rest). A file of unknown
+    * row count is never dead.
+    */
+  private def fates(files: Seq[FileEntry], counts: Map[String, Long])
+      : (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) = {
+    val (touched, carried) = files.partition(e => counts.contains(baseName(e.path)))
+    val (dead, partial) = touched.partition(e =>
+      e.rows >= 0 && counts(baseName(e.path)) >= liveRows(e))
+    (carried, dead, partial)
+  }
+
+  /** `files` after a merge-on-read write: `dead` dropped, each file the
+    * written `dv` (path, totals per basename) counts re-pointed at it,
+    * the rest carried in place.
+    */
+  private def withDv(files: Seq[FileEntry], dead: Seq[FileEntry],
+      dv: Option[(String, Map[String, Long])]): Seq[FileEntry] = {
+    val deadPaths = dead.map(_.path).toSet
+    files.filterNot(e => deadPaths.contains(e.path)).map(e => dv.flatMap { case (rel, totals) =>
+      totals.get(baseName(e.path)).map(t => e.copy(dv = Some(DvRef(rel, t))))
+    }.getOrElse(e))
+  }
+
+  /** The predicate narrowing of [[updateWhere]], [[updateWhereMor]]
+    * and [[replaceWhere]]: [[statsCandidates]], then ONE dv-aware scan
+    * of them counting the LIVE rows `condition` matches per file
+    * basename (a dead row must neither force a rewrite nor miscount a
+    * full-file drop). O(files) on the driver, never rows.
     */
   private def matchedLivePerFile(spark: SparkSession, dir: String, prev: Manifest,
-      condition: Column): (Seq[FileEntry], Map[String, Long]) = {
-    val schema = prev.schema
-    // resolve the predicate against the scan so the collected condition
-    // references PHYSICAL attributes, matching the physical-keyed
-    // manifest stats (same trick as deleteWhere; an unpushable
-    // condition stays logical and simply prunes nothing)
-    val resolved = readVersion(spark, dir, prev.version).filter(condition)
-      .queryExecution.optimizedPlan.collect {
-        case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
-      }
-    val index = new SnapshotFileIndex(dir, prev.files,
-      physicalSchema(schema, prev.mapping), prev.tsMs)
-    val candNames = index.listFiles(Nil, resolved)
-      .flatMap(_.files.map(_.getPath.getName)).toSet
-    val candidates = prev.files.filter(e => candNames.contains(baseName(e.path)))
-    if (candidates.isEmpty) return (candidates, Map.empty)
-    val candPhys = spark.read.schema(physicalSchema(schema, prev.mapping))
-      .parquet(candidates.map(e => absPath(dir, e.path)): _*)
-    val cand = candPhys.select(schema.fields.toSeq.map(f =>
-        col(prev.mapping.getOrElse(f.name, f.name)).as(f.name)) :+
-        col("_metadata").as("__meta"): _*)
-      .withColumn("__gf", element_at(split(col("__meta.file_path"), "/"), -1))
-      .withColumn("__gp", col("__meta.row_index"))
-    val dvDirs = candidates.flatMap(_.dv.map(_.path)).distinct
-    val live = if (dvDirs.isEmpty) cand else {
-      val dv = spark.read.parquet(dvDirs.map(d => absPath(dir, d)): _*)
-      cand.join(dv, cand("__gf") === dv("__dv_file") && cand("__gp") === dv("__dv_pos"),
-        "left_anti")
-    }
-    val counts = live.filter(condition).groupBy(col("__gf")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (candidates, counts)
+      condition: Column): Map[String, Long] = {
+    val candidates = statsCandidates(spark, dir, prev, condition)
+    if (candidates.isEmpty) Map.empty
+    else countsBy(positionedScan(spark, dir, prev, candidates).filter(condition), "__gf")
   }
 
   /** Predicate-targeted UPDATE (`UPDATE t SET c = expr, … WHERE p`):
@@ -1851,17 +1875,14 @@ object Snapshot {
   def updateWhere(spark: SparkSession, dir: String, condition: Column,
       set: Map[String, Column], batchId: Option[Long] = None,
       txnApp: Option[String] = None): Option[Long] = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     val unknown = set.keys.filterNot(schema.fieldNames.contains).toSeq.sorted
     require(unknown.isEmpty,
       s"updateWhere: SET names columns the table lacks: ${unknown.mkString(", ")}")
-    val (_, counts) = matchedLivePerFile(spark, dir, prev, condition)
+    val counts = matchedLivePerFile(spark, dir, prev, condition)
     if (counts.isEmpty) return None
-    val touchedNames = counts.keySet
-    val (touched, untouched) =
-      prev.files.partition(e => touchedNames.contains(baseName(e.path)))
+    val (touched, untouched) = prev.files.partition(e => counts.contains(baseName(e.path)))
     val base = readEntries(spark, dir, touched, schema, prev.tsMs, prev.mapping)
     val updated = base.select(schema.fields.toSeq.map { f =>
       set.get(f.name) match {
@@ -1902,35 +1923,18 @@ object Snapshot {
   def updateWhereMor(spark: SparkSession, dir: String, condition: Column,
       set: Map[String, Column], batchId: Option[Long] = None,
       txnApp: Option[String] = None): Option[Long] = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     val unknown = set.keys.filterNot(schema.fieldNames.contains).toSeq.sorted
     require(unknown.isEmpty,
       s"updateWhereMor: SET names columns the table lacks: ${unknown.mkString(", ")}")
-    val (candidates, counts) = matchedLivePerFile(spark, dir, prev, condition)
+    val counts = matchedLivePerFile(spark, dir, prev, condition)
     if (counts.isEmpty) return None
-    val f = fs(spark, dir)
-    val touchedNames = counts.keySet
-    val touched = candidates.filter(e => touchedNames.contains(baseName(e.path)))
-
+    val (_, dead, partial) = fates(prev.files, counts)
     // ONE dv-aware scan of just the touched files; `matched` feeds BOTH
     // outputs (updated rows + tombstone positions), persisted so the
     // two writes share the work
-    val candPhys = spark.read.schema(physicalSchema(schema, prev.mapping))
-      .parquet(touched.map(e => absPath(dir, e.path)): _*)
-    val cand = candPhys.select(schema.fields.toSeq.map(fl =>
-        col(prev.mapping.getOrElse(fl.name, fl.name)).as(fl.name)) :+
-        col("_metadata").as("__meta"): _*)
-      .withColumn("__gf", element_at(split(col("__meta.file_path"), "/"), -1))
-      .withColumn("__gp", col("__meta.row_index"))
-    val dvDirs = touched.flatMap(_.dv.map(_.path)).distinct
-    val live = if (dvDirs.isEmpty) cand else {
-      val dv = spark.read.parquet(dvDirs.map(d => absPath(dir, d)): _*)
-      cand.join(dv, cand("__gf") === dv("__dv_file") && cand("__gp") === dv("__dv_pos"),
-        "left_anti")
-    }
-    val matched = live.filter(condition).persist()
+    val matched = positionedScan(spark, dir, prev, dead ++ partial).filter(condition).persist()
     try {
       // (a) the updated rows — constraint-gated BEFORE any dv lands
       val updated = matched.select(schema.fields.toSeq.map { fl =>
@@ -1941,43 +1945,13 @@ object Snapshot {
       }: _*)
       val newFiles = writeDataFiles(spark, dir, updated, prev.constraints,
         prev.mapping, prev.spec)
-
-      // (b) tombstones: per-file fates — full-match files DROP (their
-      // rows all moved), partial files carry a dv (old positions
-      // unioned in, so each entry references ONE complete dataset)
-      def liveRows(e: FileEntry): Long = e.rows - e.dv.map(_.deleted).getOrElse(0L)
-      val (dead, partial) = touched.partition(e =>
-        e.rows >= 0 && counts(baseName(e.path)) >= liveRows(e))
-      val partialNames = partial.map(e => baseName(e.path)).toSet
-      var finalRel: Option[String] = None
-      var totals: Map[String, Long] = Map.empty
-      if (partial.nonEmpty) {
-        import spark.implicits._
-        val pairs = matched.filter(col("__gf").isin(partialNames.toSeq: _*))
-          .select(col("__gf").as("__dv_file"), col("__gp").as("__dv_pos"))
-        val withOld = partial.filter(_.dv.isDefined) match {
-          case Seq() => pairs
-          case withDv =>
-            val names = withDv.map(e => baseName(e.path)).toDF("__dv_file")
-            val old = spark.read.parquet(
-                withDv.flatMap(_.dv.map(d => absPath(dir, d.path))).distinct: _*)
-              .join(names, Seq("__dv_file"), "left_semi")
-            pairs.unionByName(old).distinct()
-        }
-        val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
-        withOld.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-        totals = spark.read.parquet(s"$dir/$rel").groupBy(col("__dv_file")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        finalRel = Some(rel)
-      }
-      val files = prev.files.flatMap { e =>
-        val name = baseName(e.path)
-        if (!touchedNames.contains(name)) Some(e)
-        else if (!partialNames.contains(name)) None // whole file moved: drop
-        else Some(e.copy(dv = finalRel.map(rel => DvRef(rel, totals(name)))))
-      } ++ newFiles
-      Some(commitManifest(spark, dir, "update", prev.schemaDdl, files,
-        batchId, txnApp, Some(prev),
+      // (b) tombstones: full-match files DROP (their rows all moved),
+      // partial files carry a dv
+      val dv = if (partial.isEmpty) None else Some(writeDv(spark, dir,
+        matched.filter(col("__gf").isin(partial.map(e => baseName(e.path)): _*))
+          .select(col("__gf").as("__dv_file"), col("__gp").as("__dv_pos")), partial))
+      Some(commitManifest(spark, dir, "update", prev.schemaDdl,
+        withDv(prev.files, dead, dv) ++ newFiles, batchId, txnApp, Some(prev),
         metrics = Map("rows_updated" -> counts.values.sum,
           "files_rewritten" -> 0L,
           "files_dropped" -> dead.size.toLong,
@@ -2017,8 +1991,7 @@ object Snapshot {
   def replaceWhere(spark: SparkSession, dir: String, condition: Column,
       data: DataFrame, batchId: Option[Long] = None,
       txnApp: Option[String] = None): Option[Long] = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     val missing = schema.fieldNames.filterNot(data.columns.contains).toSeq
     require(missing.isEmpty,
@@ -2029,16 +2002,11 @@ object Snapshot {
     require(strays == 0L,
       "replaceWhere: every replacement row must satisfy the predicate " +
         "(rows outside the claimed range would make the overwrite non-idempotent)")
-    val (_, counts) = matchedLivePerFile(spark, dir, prev, condition)
+    val counts = matchedLivePerFile(spark, dir, prev, condition)
     // exact no-op (nothing to delete, nothing to insert): mint NO
     // version — an identical manifest state must not grow history
     if (counts.isEmpty && aligned.isEmpty) return None
-    val touchedNames = counts.keySet
-    def liveRows(e: FileEntry): Long = e.rows - e.dv.map(_.deleted).getOrElse(0L)
-    val (touched, carried) =
-      prev.files.partition(e => touchedNames.contains(baseName(e.path)))
-    val (dead, partial) = touched.partition(e =>
-      e.rows >= 0 && counts(baseName(e.path)) >= liveRows(e))
+    val (carried, dead, partial) = fates(prev.files, counts)
     val kept =
       if (partial.isEmpty) Seq.empty[FileEntry]
       else writeDataFiles(spark, dir,
@@ -2063,15 +2031,26 @@ object Snapshot {
     */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
-    val bytes = prev.files.map(_.bytes).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val df = readVersion(spark, dir, prev.version).repartition(n)
+    val prev = latest(spark, dir)
+    rewriteFiles(spark, dir, prev, prev.files, targetBytes, "compact")(_.repartition(_))
+  }
+
+  /** The rewrite-and-commit body of [[compact]] and [[optimize]]:
+    * `rewrite`'s live rows, laid out by `layout` into the file count
+    * that reaches `targetBytes` each, become fresh files (dvs
+    * materialized away); the other files carry; published as `op`.
+    */
+  private def rewriteFiles(spark: SparkSession, dir: String, prev: Manifest,
+      rewrite: Seq[FileEntry], targetBytes: Long, op: String)(
+      layout: (DataFrame, Int) => DataFrame): Long = {
+    val n = math.max(1, math.ceil(rewrite.map(_.bytes).sum.toDouble / targetBytes).toInt)
+    val df = layout(readEntries(spark, dir, rewrite, prev.schema, prev.tsMs, prev.mapping), n)
     val files = writeDataFiles(spark, dir, df, mapping = prev.mapping,
       spec = prev.spec, cluster = false)
-    commitManifest(spark, dir, "compact", prev.schemaDdl, files, None, None, Some(prev),
-      metrics = Map("files_rewritten" -> prev.files.size.toLong,
+    val rewritten = rewrite.map(_.path).toSet
+    commitManifest(spark, dir, op, prev.schemaDdl,
+      prev.files.filterNot(e => rewritten.contains(e.path)) ++ files, None, None, Some(prev),
+      metrics = Map("files_rewritten" -> rewrite.size.toLong,
         "files_added" -> files.size.toLong))
   }
 
@@ -2094,8 +2073,7 @@ object Snapshot {
   def cloneShallow(spark: SparkSession, srcDir: String, dstDir: String): Long = {
     require(latestVersion(spark, dstDir).isEmpty,
       s"clone target $dstDir already holds a table")
-    val src = baseManifest(spark, srcDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $srcDir"))
+    val src = latest(spark, srcDir)
     // qualify the source root so the recorded references stay valid no
     // matter what working directory later resolves them
     val srcRoot = fs(spark, srcDir).makeQualified(new Path(srcDir)).toString
@@ -2124,8 +2102,7 @@ object Snapshot {
     */
   def addConstraint(spark: SparkSession, dir: String, name: String,
       predicate: String): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     require(!prev.constraints.contains(name),
       s"constraint '$name' already exists at $dir")
     val violating = readVersion(spark, dir, prev.version)
@@ -2139,8 +2116,7 @@ object Snapshot {
 
   /** ALTER: drop a named CHECK constraint (metadata-only commit). */
   def dropConstraint(spark: SparkSession, dir: String, name: String): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     require(prev.constraints.contains(name), s"no constraint '$name' at $dir")
     commitManifest(spark, dir, "alter", prev.schemaDdl, prev.files,
       None, None, Some(prev),
@@ -2167,8 +2143,7 @@ object Snapshot {
     * (refused loudly — this layer does not rewrite SQL predicates).
     */
   def renameColumn(spark: SparkSession, dir: String, from: String, to: String): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     require(schema.fieldNames.contains(from), s"no column '$from' at $dir")
     require(!schema.fieldNames.contains(to),
@@ -2206,8 +2181,7 @@ object Snapshot {
     * drop the column from the files they touch.
     */
   def dropColumn(spark: SparkSession, dir: String, name: String): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     require(schema.fieldNames.contains(name), s"no column '$name' at $dir")
     require(schema.fields.length >= 2, s"cannot drop the only column of $dir")
@@ -2235,8 +2209,7 @@ object Snapshot {
     * genuinely empty instead of resurrecting old bytes.
     */
   def addColumn(spark: SparkSession, dir: String, name: String, ddlType: String): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     require(!schema.fieldNames.contains(name), s"column '$name' already exists at $dir")
     val field = StructType.fromDDL(s"`$name` $ddlType").fields.head.copy(nullable = true)
@@ -2281,8 +2254,7 @@ object Snapshot {
     */
   def widenColumn(spark: SparkSession, dir: String, name: String,
       ddlType: String): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val schema = prev.schema
     require(schema.fieldNames.contains(name), s"no column '$name' at $dir")
     val field = schema.fields(schema.fieldIndex(name))
@@ -2318,8 +2290,7 @@ object Snapshot {
     * one).
     */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val target = readManifest(spark, dir, toVersion)
     commitManifest(spark, dir, "restore", target.schemaDdl, target.files,
       None, None, Some(prev),
@@ -2366,30 +2337,22 @@ object Snapshot {
     require(Seq(clusterBy.nonEmpty, zorderBy.isDefined, hilbertBy.isDefined)
         .count(identity) <= 1,
       "optimize: clusterBy, zorderBy, and hilbertBy are mutually exclusive")
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     // dv'd files join the residue regardless of size: OPTIMIZE is the
     // maintenance pass that PURGES deletion vectors (rewriting the file
     // without its deleted rows), restoring the no-anti-join fast read
-    val (small, kept) = prev.files.partition(e => e.bytes < smallBytes || e.dv.isDefined)
+    val small = prev.files.filter(e => e.bytes < smallBytes || e.dv.isDefined)
     if (small.size < minFiles) return None
-    val schema = prev.schema
-    val df0 = readEntries(spark, dir, small, schema, prev.tsMs, prev.mapping)
-    val n = math.max(1, math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt)
-    val df = (zorderBy, hilbertBy) match {
-      case (Some((a, b)), _) => graft.operators.Layout.zorderBy(df0, col(a), col(b), n)
-      case (_, Some((a, b))) => graft.operators.Layout.hilbertBy(df0, col(a), col(b), n)
-      case _ =>
-        if (clusterBy.isEmpty) df0.repartition(n)
-        else df0.repartitionByRange(n, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-    }
-    val files = writeDataFiles(spark, dir, df, mapping = prev.mapping,
-      spec = prev.spec, cluster = false)
-    Some(commitManifest(spark, dir, "optimize", prev.schemaDdl,
-      kept ++ files, None, None, Some(prev),
-      metrics = Map("files_rewritten" -> small.size.toLong,
-        "files_added" -> files.size.toLong)))
+    Some(rewriteFiles(spark, dir, prev, small, targetBytes, "optimize") { (df0, n) =>
+      (zorderBy, hilbertBy) match {
+        case (Some((a, b)), _) => graft.operators.Layout.zorderBy(df0, col(a), col(b), n)
+        case (_, Some((a, b))) => graft.operators.Layout.hilbertBy(df0, col(a), col(b), n)
+        case _ =>
+          if (clusterBy.isEmpty) df0.repartition(n)
+          else df0.repartitionByRange(n, clusterBy.map(col): _*)
+            .sortWithinPartitions(clusterBy.map(col): _*)
+      }
+    })
   }
 
   /** Metadata-only maintenance report feeding [[optimize]]: a
@@ -2407,8 +2370,7 @@ object Snapshot {
       smallBytes: Long = 32L * 1024 * 1024,
       targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
     import spark.implicits._
-    val prev = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val prev = latest(spark, dir)
     val smallTotal = prev.files.filter(_.bytes < smallBytes).map(_.bytes).sum
     val projected = math.max(1, math.ceil(smallTotal.toDouble / targetBytes).toInt)
     prev.files
@@ -2834,8 +2796,7 @@ object Snapshot {
     val bdir = branchDir(dir, name)
     val head = baseManifest(spark, bdir).getOrElse(
       throw new IllegalStateException(s"branch '$name' at $dir has no committed version"))
-    val main = baseManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir"))
+    val main = latest(spark, dir)
     if (main.version != fork)
       throw new java.util.ConcurrentModificationException(
         s"fast-forward of branch '$name' at $dir: main advanced to version " +
@@ -3109,16 +3070,9 @@ object Snapshot {
     * [[SnapshotFileIndex.listFiles]] keeps for the same predicate.
     */
   private[graft] def candidateFilePaths(spark: SparkSession, dir: String,
-      version: Long, filter: org.apache.spark.sql.Column): Seq[String] = {
-    val df = readVersion(spark, dir, version)
-    val resolved = df.filter(filter).queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    val m = readManifest(spark, dir, version)
-    val index = new SnapshotFileIndex(dir, m.files,
-      physicalSchema(m.schema, m.mapping), m.tsMs)
-    index.listFiles(Nil, resolved).flatMap(_.files.map(_.getPath.toString))
-  }
+      version: Long, filter: Column): Seq[String] =
+    statsCandidates(spark, dir, readManifest(spark, dir, version), filter)
+      .map(e => new Path(absPath(dir, e.path)).toString)
 }
 
 /** Manifest-backed [[FileIndex]]: lists a snapshot version's immutable

@@ -123,23 +123,6 @@ class PipelineSpec extends SparkSpec {
     assert(broken.csv().map(_.count()) == Right(2L))
   }
 
-  test("the cache builder's row count is trusted only where no task is retried") {
-    assert(Pipeline.cacheCountExact("local", visibilityTracking = false))
-    assert(Pipeline.cacheCountExact("local[4]", visibilityTracking = false))
-    assert(Pipeline.cacheCountExact("local[*]", visibilityTracking = false))
-    assert(Pipeline.cacheCountExact("local[4, 1]", visibilityTracking = false))
-    assert(!Pipeline.cacheCountExact("local[4,2]", visibilityTracking = false))
-    assert(!Pipeline.cacheCountExact("local-cluster[2,1,1024]", visibilityTracking = false))
-    assert(!Pipeline.cacheCountExact("spark://host:7077", visibilityTracking = false))
-    assert(Pipeline.cacheCountExact("yarn", visibilityTracking = true))
-    // the premise on this spec's own master: a failed task is not retried
-    assert(Pipeline.cacheCountExact(spark.sparkContext.master, visibilityTracking = false))
-    val e = intercept[Exception](spark.sparkContext.parallelize(1 to 2, 2).map { x =>
-      if (org.apache.spark.TaskContext.get.attemptNumber == 0) sys.error("first attempt") else x
-    }.collect())
-    assert(e.getMessage.contains("first attempt"))
-  }
-
   test("a failing sink fails the refresh and is never blamed on a source") {
     val p = Pipeline.builder(spark)
       .source("ok1")(s => { import s.implicits._; Seq(1L, 2L).toDF("id") })
@@ -151,6 +134,16 @@ class PipelineSpec extends SparkSpec {
     val svc = new Service(spark, p, Files.createTempDirectory("graft-pipe-sink").toString)
     val r = svc.refresh()
     assert(r.isLeft && r.swap.toOption.get.contains("sink down"))
+  }
+
+  test("refresh counts 0 rows when every row is filtered out or no source has any") {
+    import spark.implicits._
+    val filtered = Pipeline.builder(spark)
+      .source("ids")(_.range(1, 5, 1, 2).toDF("id"))
+      .transform(_.where(col("id") > 10))
+    assert(filtered.refresh() == Pipeline.RefreshResult(0L, Nil))
+    val none = Pipeline.builder(spark).source("none")(_ => Seq.empty[Long].toDF("id"))
+    assert(none.refresh() == Pipeline.RefreshResult(0L, Nil))
   }
 
   test("report emits count / distinct / freshness") {
