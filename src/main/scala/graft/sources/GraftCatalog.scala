@@ -852,7 +852,7 @@ private[sources] object GraftCatalog {
       "delete_branch")
 }
 
-/** The staged CTAS/RTAS table: collects the SELECT's rows as staged
+/** The staged CTAS/RTAS table: writes the SELECT's rows as staged
   * (unreferenced) data files; `commitStagedChanges` is the ONLY
   * publish point; `abortStagedChanges` removes every staged byte —
   * and for a CREATE, the whole directory, leaving no table.
@@ -863,8 +863,8 @@ private[sources] final class GraftStagedTable(ident: Identifier, dir: String,
 
   private def spark = SparkSession.active
 
-  /** (relDir, entries) staged by the write; empty until insert runs. */
-  @volatile private var staged: Option[(String, Seq[Snapshot.FileEntry])] = None
+  /** The entries staged by the write; empty until insert runs. */
+  @volatile private var staged: Seq[Snapshot.FileEntry] = Seq.empty
 
   override def name(): String = s"graft-staged `$dir`"
   override def schema(): StructType = tableSchema
@@ -887,24 +887,23 @@ private[sources] final class GraftStagedTable(ident: Identifier, dir: String,
               // align to the declared schema positionally (CTAS output
               // names follow the SELECT; the table's names rule)
               val aligned = data.toDF(tableSchema.fieldNames.toIndexedSeq: _*)
-              staged = Some(Snapshot.stageDataFiles(data.sparkSession, dir,
-                aligned, spec))
+              staged = Snapshot.writeDataFiles(data.sparkSession, dir, aligned,
+                spec = spec)
             }
           }
       }
     }
 
   override def commitStagedChanges(): Unit = {
-    val entries = staged.map(_._2).getOrElse(Seq.empty)
     val nullable = StructType(tableSchema.fields.map(_.copy(nullable = true)))
-    try Snapshot.publishStaged(spark, dir, nullable.toDDL, entries, spec, replace)
+    try Snapshot.publishStaged(spark, dir, nullable.toDDL, staged, spec, replace)
     catch { case e: Throwable => abortStagedChanges(); throw e }
   }
 
   override def abortStagedChanges(): Unit = {
     val s = spark
     // always drop OUR staged bytes
-    staged.foreach { case (rel, _) => Snapshot.discardStaged(s, dir, rel) }
+    Snapshot.discardWritten(s, dir, staged)
     // a CREATE aborts to NO table — but only when no committed table
     // sits at the path AND nothing else lives there: if a RACING CTAS
     // won version 1 while we staged, deleting the directory would
@@ -915,7 +914,7 @@ private[sources] final class GraftStagedTable(ident: Identifier, dir: String,
     // existence) and produce a v1 manifest referencing deleted
     // parquet: a corrupt table. So the abort removes only what is
     // provably debris: directory trees holding NO files (our own
-    // discardStaged above already emptied our commit dir).
+    // discardWritten above already removed our commit dir).
     if (!replace && Snapshot.latestVersion(s, dir).isEmpty) {
       val f = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
       def fileless(p: Path): Boolean = {
@@ -1003,270 +1002,176 @@ private[sources] final class SnapshotChangesTable(dir: String, fromDefault: Opti
   }
 }
 
-/** `refs` metadata table: every named ref on the table —
-  * `SELECT * FROM graft.db.t.refs` — tags (immutable version pins) and
-  * branches (writable forks, with their current head). Driver-local
-  * from the `_refs/` listing, zero data I/O.
+/** A driver-local metadata table over the snapshot table at `dir`,
+  * `SELECT * FROM graft.db.t.<kind>`: its rows come from the manifests
+  * and refs alone ([[LocalScan]]) — zero executors, zero data I/O.
+  * Each table supplies only its schema and its `rows()`.
+  */
+private[sources] abstract class SnapshotMetadataTable(kind: String, dir: String, ddl: String)
+    extends Table with SupportsRead {
+
+  private val tableSchema: StructType = StructType.fromDDL(ddl)
+
+  protected def rows(spark: SparkSession): Array[InternalRow]
+
+  override def name(): String = s"graft-$kind `$dir`"
+  override def schema(): StructType = tableSchema
+  override def capabilities(): util.Set[TableCapability] =
+    Set(TableCapability.BATCH_READ).asJava
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder {
+      override def build(): Scan = new LocalScan {
+        override def readSchema(): StructType = tableSchema
+        override def rows(): Array[InternalRow] =
+          SnapshotMetadataTable.this.rows(SparkSession.active)
+      }
+    }
+
+  /** One row of `values`, strings as UTF8. */
+  protected def row(values: Any*): InternalRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values.map {
+      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      case v => v
+    }.toArray)
+}
+
+/** `refs` metadata table: every named ref on the table — tags
+  * (immutable version pins) and branches (writable forks, with their
+  * current head), from the `_refs/` listing.
   */
 private[sources] final class SnapshotRefsTable(dir: String)
-    extends Table with SupportsRead {
+    extends SnapshotMetadataTable("refs", dir,
+      "name STRING, type STRING, version BIGINT, head_version BIGINT") {
 
-  private def spark = SparkSession.active
-
-  private val refsSchema: StructType = StructType.fromDDL(
-    "name STRING, type STRING, version BIGINT, head_version BIGINT")
-
-  override def name(): String = s"graft-refs `$dir`"
-  override def schema(): StructType = refsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def readSchema(): StructType = refsSchema
-        override def rows(): Array[InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val s = spark
-          val tagRows = Snapshot.tags(s, dir).toSeq.map { case (n, v) =>
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](UTF8String.fromString(n), UTF8String.fromString("tag"),
-                v, null)): InternalRow
-          }
-          val branchRows = Snapshot.branches(s, dir).toSeq.map { case (n, fork) =>
-            val head = Snapshot.latestVersion(s, Snapshot.branchDir(dir, n))
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](UTF8String.fromString(n), UTF8String.fromString("branch"),
-                fork, head.map(java.lang.Long.valueOf).orNull)): InternalRow
-          }
-          (tagRows ++ branchRows).sortBy(_.getUTF8String(0).toString).toArray
-        }
-      }
+  override protected def rows(s: SparkSession): Array[InternalRow] = {
+    val tagRows = Snapshot.tags(s, dir).toSeq.map { case (n, v) => row(n, "tag", v, null) }
+    val branchRows = Snapshot.branches(s, dir).toSeq.map { case (n, fork) =>
+      row(n, "branch", fork, Snapshot.latestVersion(s, Snapshot.branchDir(dir, n))
+        .map(java.lang.Long.valueOf).orNull)
     }
+    (tagRows ++ branchRows).sortBy(_.getUTF8String(0).toString).toArray
+  }
 }
 
-/** `files` metadata table: the LATEST version's file inventory —
-  * `SELECT * FROM graft.db.t.files` — path, size, physical/live rows,
-  * dv state, and the per-file min/max of every stats column as a
-  * sorted-key JSON string; driver-local from the manifest, zero data
-  * I/O. The debugging/ops surface behind every skipping question
-  * ("why didn't my predicate prune?" — look at the ranges).
+/** `files` metadata table: the LATEST version's file inventory — path,
+  * size, physical/live rows, dv state, and the per-file min/max of
+  * every stats column as a sorted-key JSON string. The debugging/ops
+  * surface behind every skipping question ("why didn't my predicate
+  * prune?" — look at the ranges).
   */
 private[sources] final class SnapshotFilesTable(dir: String)
-    extends Table with SupportsRead {
+    extends SnapshotMetadataTable("files", dir,
+      "path STRING, bytes BIGINT, rows BIGINT, live_rows BIGINT, " +
+        "has_dv BOOLEAN, stats STRING") {
 
-  private def spark = SparkSession.active
-
-  private val filesSchema: StructType = StructType.fromDDL(
-    "path STRING, bytes BIGINT, rows BIGINT, live_rows BIGINT, " +
-      "has_dv BOOLEAN, stats STRING")
-
-  override def name(): String = s"graft-files `$dir`"
-  override def schema(): StructType = filesSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def readSchema(): StructType = filesSchema
-        override def rows(): Array[InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val s = spark
-          val v = Snapshot.latestVersion(s, dir).getOrElse(
-            throw new IllegalStateException(s"no committed version at $dir"))
-          // min/max are user data (string column values can hold quotes,
-          // backslashes, control chars) — render through the JSON
-          // library, never by concatenation, or the stats column emits
-          // malformed JSON for exactly the values worth inspecting
-          def jstr(x: String): String = org.json4s.jackson.JsonMethods.compact(
-            org.json4s.jackson.JsonMethods.render(org.json4s.JString(x)))
-          Snapshot.readManifest(s, dir, v).files.map { e =>
-            val stats = e.stats.toSeq.sortBy(_._1).map { case (c, cs) =>
-              s"${jstr(c)}:{\"min\":${cs.min.map(jstr).getOrElse("null")}," +
-                s"\"max\":${cs.max.map(jstr).getOrElse("null")}," +
-                s"\"nulls\":${cs.nulls}}"
-            }.mkString("{", ",", "}")
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](
-                UTF8String.fromString(e.path),
-                e.bytes,
-                e.rows,
-                e.rows - e.dv.map(_.deleted).getOrElse(0L),
-                e.dv.isDefined,
-                UTF8String.fromString(stats)))
-          }.toArray
-        }
-      }
-    }
+  override protected def rows(s: SparkSession): Array[InternalRow] = {
+    // min/max are user data (string column values can hold quotes,
+    // backslashes, control chars) — render through the JSON
+    // library, never by concatenation, or the stats column emits
+    // malformed JSON for exactly the values worth inspecting
+    def jstr(x: String): String = org.json4s.jackson.JsonMethods.compact(
+      org.json4s.jackson.JsonMethods.render(org.json4s.JString(x)))
+    Snapshot.latest(s, dir).files.map { e =>
+      val stats = e.stats.toSeq.sortBy(_._1).map { case (c, cs) =>
+        s"${jstr(c)}:{\"min\":${cs.min.map(jstr).getOrElse("null")}," +
+          s"\"max\":${cs.max.map(jstr).getOrElse("null")}," +
+          s"\"nulls\":${cs.nulls}}"
+      }.mkString("{", ",", "}")
+      row(e.path, e.bytes, e.rows, Snapshot.liveRows(e), e.dv.isDefined, stats)
+    }.toArray
+  }
 }
 
-/** `detail` metadata table — the DESCRIBE DETAIL surface:
-  * `SELECT * FROM graft.db.t.detail` — ONE row summarizing the latest
-  * version (version, op, commit ts, schema DDL, layout spec, file/
-  * row/byte totals, dv state, constraint count, tags, branches).
-  * Driver-local from the manifest + refs: zero data I/O at any scale.
+/** `detail` metadata table — the DESCRIBE DETAIL surface: ONE row
+  * summarizing the latest version (version, op, commit ts, schema DDL,
+  * layout spec, file/row/byte totals, dv state, constraint count,
+  * tags, branches).
   */
 private[sources] final class SnapshotDetailTable(dir: String)
-    extends Table with SupportsRead {
+    extends SnapshotMetadataTable("detail", dir,
+      "version BIGINT, op STRING, ts_ms BIGINT, schema_ddl STRING, " +
+        "partition_cols STRING, stats_cols STRING, bloom_cols STRING, " +
+        "num_files BIGINT, total_rows BIGINT, live_rows BIGINT, " +
+        "total_bytes BIGINT, files_with_dv BIGINT, num_constraints BIGINT, " +
+        "num_tags BIGINT, num_branches BIGINT") {
 
-  private def spark = SparkSession.active
-
-  private val detailSchema: StructType = StructType.fromDDL(
-    "version BIGINT, op STRING, ts_ms BIGINT, schema_ddl STRING, " +
-      "partition_cols STRING, stats_cols STRING, bloom_cols STRING, " +
-      "num_files BIGINT, total_rows BIGINT, live_rows BIGINT, " +
-      "total_bytes BIGINT, files_with_dv BIGINT, num_constraints BIGINT, " +
-      "num_tags BIGINT, num_branches BIGINT")
-
-  override def name(): String = s"graft-detail `$dir`"
-  override def schema(): StructType = detailSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def readSchema(): StructType = detailSchema
-        override def rows(): Array[InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val s = spark
-          val v = Snapshot.latestVersion(s, dir).getOrElse(
-            throw new IllegalStateException(s"no committed version at $dir"))
-          val m = Snapshot.readManifest(s, dir, v)
-          def csv(xs: Seq[String]) = UTF8String.fromString(xs.mkString(","))
-          Array(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](
-              m.version, UTF8String.fromString(m.op), m.tsMs,
-              UTF8String.fromString(m.schemaDdl),
-              csv(m.spec.partitionCols), csv(m.spec.statsCols), csv(m.spec.bloomCols),
-              m.files.size.toLong,
-              m.files.map(_.rows).sum,
-              m.files.map(e => e.rows - e.dv.map(_.deleted).getOrElse(0L)).sum,
-              m.files.map(_.bytes).sum,
-              m.files.count(_.dv.isDefined).toLong,
-              m.constraints.size.toLong,
-              Snapshot.tags(s, dir).size.toLong,
-              Snapshot.branches(s, dir).size.toLong)))
-        }
-      }
-    }
+  override protected def rows(s: SparkSession): Array[InternalRow] = {
+    val m = Snapshot.latest(s, dir)
+    Array(row(m.version, m.op, m.tsMs, m.schemaDdl,
+      m.spec.partitionCols.mkString(","), m.spec.statsCols.mkString(","),
+      m.spec.bloomCols.mkString(","),
+      m.files.size.toLong,
+      m.files.map(_.rows).sum,
+      m.files.map(Snapshot.liveRows).sum,
+      m.files.map(_.bytes).sum,
+      m.files.count(_.dv.isDefined).toLong,
+      m.constraints.size.toLong,
+      Snapshot.tags(s, dir).size.toLong,
+      Snapshot.branches(s, dir).size.toLong))
+  }
 }
 
 /** `partitions` metadata table — per-partition-value census for
   * identity-partitioned tables, straight from manifest stats (writes
   * shuffle by the partition columns, so each file carries ONE value
-  * per partition column: min == max). Zero data I/O: the answer to
-  * "how big is each partition?" is a driver-side manifest fold even
-  * at an 800k-file table. Files written before the partition spec (or
-  * by non-clustering writers) can span values — they report as one
+  * per partition column: min == max). The answer to "how big is each
+  * partition?" is a driver-side manifest fold even at an 800k-file
+  * table. Files written before the partition spec (or by
+  * non-clustering writers) can span values — they report as one
   * `min..max` range row with `mixed = true` instead of lying.
   */
 private[sources] final class SnapshotPartitionsTable(dir: String)
-    extends Table with SupportsRead {
+    extends SnapshotMetadataTable("partitions", dir,
+      "partition STRING, num_files BIGINT, total_rows BIGINT, " +
+        "live_rows BIGINT, total_bytes BIGINT, mixed BOOLEAN") {
 
-  private def spark = SparkSession.active
-
-  private val partSchema: StructType = StructType.fromDDL(
-    "partition STRING, num_files BIGINT, total_rows BIGINT, " +
-      "live_rows BIGINT, total_bytes BIGINT, mixed BOOLEAN")
-
-  override def name(): String = s"graft-partitions `$dir`"
-  override def schema(): StructType = partSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def readSchema(): StructType = partSchema
-        override def rows(): Array[InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val s = spark
-          val v = Snapshot.latestVersion(s, dir).getOrElse(
-            throw new IllegalStateException(s"no committed version at $dir"))
-          val m = Snapshot.readManifest(s, dir, v)
-          require(m.spec.partitionCols.nonEmpty,
-            s"table at $dir is not partitioned — `partitions` needs PARTITIONED BY")
-          // physical stat keys: partition cols may have been renamed
-          val phys = m.spec.partitionCols.map(c => m.mapping.getOrElse(c, c))
-          // zero-row files (the CREATE's empty v1 seed) hold no
-          // partition data and would otherwise surface as a phantom
-          // "col=?" row
-          val byValue = m.files.filter(_.rows > 0L).groupBy { e =>
-            phys.map { c =>
-              val st = e.stats.get(c)
-              val mn = st.flatMap(_.min); val mx = st.flatMap(_.max)
-              (mn, mx) match {
-                case (Some(a), Some(b)) if a == b => (a, false)
-                case (Some(a), Some(b)) => (s"$a..$b", true)
-                case _ => ("?", true)
-              }
-            }
-          }
-          byValue.toSeq.map { case (key, fs) =>
-            val label = m.spec.partitionCols.zip(key.map(_._1))
-              .map { case (c, vl) => s"$c=$vl" }.mkString("/")
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](
-                UTF8String.fromString(label),
-                fs.size.toLong,
-                fs.map(_.rows).sum,
-                fs.map(e => e.rows - e.dv.map(_.deleted).getOrElse(0L)).sum,
-                fs.map(_.bytes).sum,
-                key.exists(_._2))): InternalRow
-          }.sortBy(_.getUTF8String(0).toString).toArray
+  override protected def rows(s: SparkSession): Array[InternalRow] = {
+    val m = Snapshot.latest(s, dir)
+    require(m.spec.partitionCols.nonEmpty,
+      s"table at $dir is not partitioned — `partitions` needs PARTITIONED BY")
+    // physical stat keys: partition cols may have been renamed
+    val phys = m.spec.partitionCols.map(c => m.mapping.getOrElse(c, c))
+    // zero-row files (the CREATE's empty v1 seed) hold no partition
+    // data and would otherwise surface as a phantom "col=?" row
+    val byValue = m.files.filter(_.rows > 0L).groupBy { e =>
+      phys.map { c =>
+        val st = e.stats.get(c)
+        val mn = st.flatMap(_.min); val mx = st.flatMap(_.max)
+        (mn, mx) match {
+          case (Some(a), Some(b)) if a == b => (a, false)
+          case (Some(a), Some(b)) => (s"$a..$b", true)
+          case _ => ("?", true)
         }
       }
     }
+    byValue.toSeq.map { case (key, fs) =>
+      val label = m.spec.partitionCols.zip(key.map(_._1))
+        .map { case (c, vl) => s"$c=$vl" }.mkString("/")
+      row(label, fs.size.toLong, fs.map(_.rows).sum, fs.map(Snapshot.liveRows).sum,
+        fs.map(_.bytes).sum, key.exists(_._2))
+    }.sortBy(_.getUTF8String(0).toString).toArray
+  }
 }
 
 /** Iceberg-style `history` metadata table: the commit log of a
-  * snapshot table as a queryable relation —
-  * `SELECT * FROM graft.db.t.history` — resolved entirely on the
-  * driver from manifests ([[LocalScan]]): zero executors, zero data
-  * I/O, O(versions) manifest-sized reads. Metrics ride as a
-  * deterministic sorted-key JSON string so any commit shape fits one
-  * schema.
+  * snapshot table as a queryable relation, O(versions) manifest-sized
+  * reads. Metrics ride as a deterministic sorted-key JSON string so
+  * any commit shape fits one schema.
   */
 private[sources] final class SnapshotHistoryTable(dir: String)
-    extends Table with SupportsRead {
+    extends SnapshotMetadataTable("history", dir,
+      "version BIGINT, op STRING, n_files BIGINT, n_rows BIGINT, " +
+        "size_bytes BIGINT, batch_id BIGINT, metrics STRING") {
 
-  private def spark = SparkSession.active
-
-  private val historySchema: StructType = StructType.fromDDL(
-    "version BIGINT, op STRING, n_files BIGINT, n_rows BIGINT, " +
-      "size_bytes BIGINT, batch_id BIGINT, metrics STRING")
-
-  override def name(): String = s"graft-history `$dir`"
-  override def schema(): StructType = historySchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def readSchema(): StructType = historySchema
-        override def rows(): Array[InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val s = spark
-          Snapshot.versions(s, dir).map { v =>
-            val m = Snapshot.readManifest(s, dir, v)
-            val metricsJson = m.metrics.toSeq.sortBy(_._1)
-              .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](
-                m.version,
-                UTF8String.fromString(m.op),
-                m.files.size.toLong,
-                // LIVE rows: physical rows minus dv-masked positions —
-                // what a reader of this version actually sees
-                m.files.map(e => e.rows - e.dv.map(_.deleted).getOrElse(0L)).sum,
-                m.files.map(_.bytes).sum,
-                m.batchId.map(java.lang.Long.valueOf).orNull,
-                UTF8String.fromString(metricsJson)))
-          }.toArray
-        }
-      }
-    }
+  override protected def rows(s: SparkSession): Array[InternalRow] =
+    Snapshot.versions(s, dir).map { v =>
+      val m = Snapshot.readManifest(s, dir, v)
+      val metricsJson = m.metrics.toSeq.sortBy(_._1)
+        .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
+      // LIVE rows: physical rows minus dv-masked positions — what a
+      // reader of this version actually sees
+      row(m.version, m.op, m.files.size.toLong, m.files.map(Snapshot.liveRows).sum,
+        m.files.map(_.bytes).sum, m.batchId.map(java.lang.Long.valueOf).orNull, metricsJson)
+    }.toArray
 }

@@ -112,9 +112,7 @@ private[sources] final class GraftRowLevelOperation(dir: String,
         // guard (keyed to the newer base) would not catch the mix
         val m = GraftRowLevelOperation.this.synchronized {
           if (base == null) {
-            val v = Snapshot.latestVersion(spark, dir).getOrElse(
-              throw new IllegalStateException(s"no committed version at $dir"))
-            base = Snapshot.readManifest(spark, dir, v)
+            base = Snapshot.latest(spark, dir)
             replacedPaths = base.files.map(_.path).toSet
           }
           base
@@ -148,9 +146,10 @@ private[sources] final class GraftRowLevelOperation(dir: String,
               : Unit = {
             // expect IN(_file, v1, v2, …); anything unparseable keeps
             // the conservative full file set (correct, just wider)
-            val kept = RowLevelScanFilter.inValues(predicates,
-              SnapshotStreamTable.FileColumnName)
-            kept.foreach { values =>
+            SnapshotStreamTable.inLists(predicates).collect {
+              case (SnapshotStreamTable.FileColumnName, lits) =>
+                lits.flatMap(l => Option(l.value)).map(_.toString).toSet
+            }.reduceOption(_ intersect _).foreach { values =>
               files = m.files.filter(e => values.contains(e.path))
               replacedPaths = files.map(_.path).toSet
             }
@@ -168,36 +167,6 @@ private[sources] final class GraftRowLevelOperation(dir: String,
       override def build(): Write = new RowLevelReplaceWrite(
         GraftRowLevelOperation.this, dir, info.schema())
     }
-}
-
-/** v2-Predicate helper: the distinct-values set of `IN(column, …)`
-  * runtime filters. None when no parseable IN on that column arrived
-  * — the caller keeps its conservative full set.
-  */
-private object RowLevelScanFilter {
-  import org.apache.spark.sql.connector.expressions.{Literal, NamedReference}
-  import org.apache.spark.sql.connector.expressions.filter.Predicate
-
-  def inValues(predicates: Array[Predicate], column: String): Option[Set[String]] = {
-    val sets = predicates.toSeq.flatMap { p =>
-      if (p.name() != "IN") None
-      else {
-        val ch = p.children()
-        ch.headOption match {
-          case Some(ref: NamedReference) if ref.fieldNames().toSeq == Seq(column) =>
-            val vals = ch.tail.flatMap {
-              case l: Literal[_] => Option(l.value).map(_.toString)
-              case _ => Seq.empty[String]
-            }
-            // every child after the reference must be a literal, or the
-            // predicate is something we don't fully understand — skip it
-            if (vals.length == ch.length - 1) Some(vals.toSet) else None
-          case _ => None
-        }
-      }
-    }
-    sets.reduceOption(_ intersect _)
-  }
 }
 
 /** The replacement write: per-task parquet files into a fresh
@@ -231,28 +200,9 @@ private final class RowLevelReplaceWrite(op: GraftRowLevelOperation,
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val s = spark
       val base = op.base
-      val committed: Set[String] = messages.flatMap {
-        case RowLevelFileCommit(names) => names
-        case _ => Seq.empty
-      }.toSet
-      val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-      val commitPath = new Path(s"$dir/$commitRel")
-      // drop files of never-committed attempts (speculation/retries)
-      if (fs.exists(commitPath))
-        fs.listStatus(commitPath).foreach { st =>
-          if (st.isFile && !committed.contains(st.getPath.getName))
-            fs.delete(st.getPath, false)
-        }
-      val entries =
-        if (committed.isEmpty) Seq.empty
-        else Snapshot.collectEntries(s, s"$dir/$commitRel", commitRel,
-          Snapshot.physicalSchema(base.schema, base.mapping))
-          .filter(e => committed.contains(Snapshot.baseName(e.path)))
-      if (entries.isEmpty && fs.exists(commitPath)) fs.delete(commitPath, true)
-      if (entries.nonEmpty)
-        Snapshot.validateWritten(s, dir, commitRel,
-          Snapshot.physicalSchema(base.schema, base.mapping),
-          base.schema.fieldNames.toSeq, base.constraints)
+      val entries = Snapshot.writtenEntries(s, dir, commitRel, base.schema, base.mapping,
+        base.spec, Snapshot.checksOf(base.constraints),
+        Some(messages.collect { case RowLevelFileCommit(names) => names }.flatten.toSet))
       val opName = op.command() match {
         case RowLevelOperation.Command.UPDATE => "update"
         case RowLevelOperation.Command.DELETE => "delete"

@@ -614,14 +614,14 @@ object Snapshot {
       statsCols = spec.statsCols.map(c => mapping.getOrElse(c, c)),
       bloomCols = spec.bloomCols.map(c => mapping.getOrElse(c, c)))
 
-  /** min/max aggregation input for a stats column: temporal types are
-    * pre-encoded to their integer domain (days / micros) so the
-    * collected external value is a plain number.
+  /** min/max aggregation input for a stats column `c` of type `dt`:
+    * temporal types are pre-encoded to their integer domain (days /
+    * micros) so the collected external value is a plain number.
     */
-  private def statExpr(f: StructField) = f.dataType match {
-    case DateType => unix_date(col(f.name))
-    case TimestampType => unix_micros(col(f.name))
-    case _ => col(f.name)
+  private def statExpr(c: Column, dt: DataType): Column = dt match {
+    case DateType => unix_date(c)
+    case TimestampType => unix_micros(c)
+    case _ => c
   }
 
   /** Canonical string encoding of a collected min/max value; None
@@ -639,13 +639,16 @@ object Snapshot {
   }
 
   /** Collect per-file entries (path, bytes, rows, column stats, and —
-    * when the spec asks — per-column bloom filters) for the files just
-    * written under `absDir` — ONE distributed aggregation grouped by
-    * `_metadata.file_path`, O(this commit's data), collected as O(this
-    * commit's files) rows on the driver. `spec` speaks PHYSICAL names.
+    * when `spec` asks — per-column bloom filters, all keyed by PHYSICAL
+    * name) for the files just written under `absDir`, and the rows
+    * violating each of `checks` — ONE distributed aggregation grouped
+    * by `_metadata.file_path`, O(this commit's data), collected as
+    * O(this commit's files) rows on the driver. The files are read
+    * under the LOGICAL names of `schema`, which `checks` speak.
     */
-  private[sources] def collectEntries(spark: SparkSession, absDir: String, relDir: String,
-      schema: StructType, spec: TableSpec = TableSpec()): Seq[FileEntry] = {
+  private def collectEntries(spark: SparkSession, absDir: String, relDir: String,
+      schema: StructType, mapping: Map[String, String], spec: TableSpec,
+      checks: Map[String, Column]): (Seq[FileEntry], Map[String, Long]) = {
     // the listing defines the file set (an all-null-partition part
     // file has rows the stats agg can't see per column; a ZERO-row
     // part file produces no agg group at all but still belongs to the
@@ -656,75 +659,110 @@ object Snapshot {
       else f.listStatus(new Path(absDir)).toSeq
         .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
         .map(s => s.getPath.getName -> s.getLen).sortBy(_._1)
-    if (listed.isEmpty) return Seq.empty
-    val df = spark.read.schema(schema).parquet(absDir)
-    val sf = statsFields(schema, spec)
+    if (listed.isEmpty) return (Seq.empty, Map.empty)
+    val phys = physicalSchema(schema, mapping)
+    val physical = physSpec(spec, mapping)
+    val logical = phys.fieldNames.zip(schema.fieldNames).toMap
+    val read = spark.read.schema(phys).parquet(absDir)
+    val (df, meta) =
+      if (!mapsAny(schema, mapping)) (read, "_metadata")
+      else (read.select(phys.fieldNames.toSeq.map(p => col(p).as(logical(p))) :+
+        col("_metadata").as("__meta"): _*), "__meta")
+    def at(fld: StructField): Column = col(logical(fld.name))
+    val sf = statsFields(phys, physical)
     // bloom keys are xxhash64(value) — type-agnostic, and the probe
     // side (SnapshotFileIndex) hashes its literal the same way
-    val bloomFlds = schema.fields.toSeq.filter(fl => spec.bloomCols.contains(fl.name))
+    val bloomFlds = phys.fields.toSeq.filter(fl => physical.bloomCols.contains(fl.name))
+    val checkNames = checks.keys.toSeq.sorted
     val aggs = (count(lit(1)).as("__rows") +:
       sf.flatMap(fld => Seq(
-        min(statExpr(fld)).as(s"__min_${fld.name}"),
-        max(statExpr(fld)).as(s"__max_${fld.name}"),
-        sum(when(col(fld.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${fld.name}")))) ++
+        min(statExpr(at(fld), fld.dataType)).as(s"__min_${fld.name}"),
+        max(statExpr(at(fld), fld.dataType)).as(s"__max_${fld.name}"),
+        sum(when(at(fld).isNull, 1L).otherwise(0L)).as(s"__nulls_${fld.name}")))) ++
       bloomFlds.map(fld => graft.functions.vector.bloomAgg(
-        xxhash64(col(fld.name)), spec.bloomBits, BloomHashes).as(s"__bloom_${fld.name}"))
-    val byName: Map[String, FileEntry] = df
-      .groupBy(col("_metadata.file_path").as("__fp"),
-        col("_metadata.file_size").as("__bytes"))
+        xxhash64(at(fld)), physical.bloomBits, BloomHashes).as(s"__bloom_${fld.name}")) ++
+      checkNames.indices.map(i => sum(when(not(coalesce(checks(checkNames(i)), lit(true))), 1L)
+        .otherwise(0L)).as(s"__check_$i"))
+    val groups = df
+      .groupBy(col(s"$meta.file_path").as("__fp"), col(s"$meta.file_size").as("__bytes"))
       .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        val abs = r.getAs[String]("__fp")
-        val name = abs.substring(abs.lastIndexOf('/') + 1)
-        val stats = sf.map { fld =>
-          fld.name -> ColStats(
-            encodeStat(fld.dataType, r.getAs[Any](s"__min_${fld.name}")),
-            encodeStat(fld.dataType, r.getAs[Any](s"__max_${fld.name}")),
-            r.getAs[Long](s"__nulls_${fld.name}"))
-        }.toMap
-        val blooms = bloomFlds.flatMap { fld =>
-          Option(r.getAs[Array[Byte]](s"__bloom_${fld.name}")).map(b =>
-            fld.name -> java.util.Base64.getEncoder.encodeToString(b))
-        }.toMap
-        name -> FileEntry(s"$relDir/$name", r.getAs[Long]("__bytes"),
-          r.getAs[Long]("__rows"), stats, None, blooms)
+      .collect().toSeq
+    val byName: Map[String, FileEntry] = groups.map { r =>
+      val abs = r.getAs[String]("__fp")
+      val name = abs.substring(abs.lastIndexOf('/') + 1)
+      val stats = sf.map { fld =>
+        fld.name -> ColStats(
+          encodeStat(fld.dataType, r.getAs[Any](s"__min_${fld.name}")),
+          encodeStat(fld.dataType, r.getAs[Any](s"__max_${fld.name}")),
+          r.getAs[Long](s"__nulls_${fld.name}"))
       }.toMap
-    listed.map { case (name, bytes) =>
+      val blooms = bloomFlds.flatMap { fld =>
+        Option(r.getAs[Array[Byte]](s"__bloom_${fld.name}")).map(b =>
+          fld.name -> java.util.Base64.getEncoder.encodeToString(b))
+      }.toMap
+      name -> FileEntry(s"$relDir/$name", r.getAs[Long]("__bytes"),
+        r.getAs[Long]("__rows"), stats, None, blooms)
+    }.toMap
+    val violations = checkNames.indices
+      .map(i => checkNames(i) -> groups.map(_.getAs[Long](s"__check_$i")).sum)
+      .filter(_._2 > 0).toMap
+    (listed.map { case (name, bytes) =>
       byName.getOrElse(name, FileEntry(s"$relDir/$name", bytes, 0L,
         sf.map(fld => fld.name -> ColStats(None, None, 0L)).toMap))
-    }
+    }, violations)
   }
 
   /** Write `df`'s rows as a fresh immutable file set under data/ and
-    * return the per-file entries (paths table-root-relative) with
-    * collected statistics. When the table carries CHECK `constraints`,
-    * the written rows are validated (one aggregation over the just-
-    * written, page-cache-warm commit — O(commit), never O(table)) and
-    * a violation aborts BEFORE any manifest publish: the data dir is
-    * removed, no version is minted, readers never see the bad rows.
-    * SQL CHECK semantics: only a FALSE predicate violates; NULL passes.
-    */
-  /** `cluster = false` (compact/optimize): the caller owns the layout
-    * — its repartition/range/z-order choice must not be re-shuffled by
+    * return its entries ([[writtenEntries]]). `cluster = false`
+    * (compact/optimize): the caller owns the layout — its repartition/
+    * range/z-order choice must not be re-shuffled by
     * [[clusterByPartitions]].
     */
-  private def writeDataFiles(spark: SparkSession, dir: String, df: DataFrame,
-      constraints: Map[String, String] = Map.empty,
+  private[sources] def writeDataFiles(spark: SparkSession, dir: String, df: DataFrame,
+      checks: Map[String, Column] = Map.empty,
       mapping: Map[String, String] = Map.empty,
       spec: TableSpec = TableSpec(),
       cluster: Boolean = true): Seq[FileEntry] = {
-    val commitId = java.util.UUID.randomUUID().toString
-    val rel = s"$DataDir/$commitId"
+    val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
     // files always carry PHYSICAL names; `df` arrives logical
-    val dfPhys = toPhysical(if (cluster) clusterByPartitions(spark, df, spec) else df, mapping)
-    dfPhys.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-    val entries = collectEntries(spark, s"$dir/$rel", rel, dfPhys.schema,
-      physSpec(spec, mapping))
-    if (entries.nonEmpty)
-      validateWritten(spark, dir, rel, dfPhys.schema,
-        df.schema.fieldNames.toSeq, constraints)
-    entries
+    toPhysical(if (cluster) clusterByPartitions(spark, df, spec) else df, mapping)
+      .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
+    writtenEntries(spark, dir, rel, df.schema, mapping, spec, checks)
   }
+
+  /** The one path from parquet files written under `dir/rel` (LOGICAL
+    * `schema`, physical names per `mapping`) to manifest entries with
+    * the stats and blooms `spec` asks for, for every writer. A DSv2
+    * write names its `committed` files; any other file there, left by
+    * a failed or speculative attempt, is deleted first. Every written
+    * row must pass `checks` (SQL CHECK semantics: only FALSE violates),
+    * counted in the stats aggregation; a violation deletes `rel` and
+    * throws before any publish. A commit dir holding no data file is
+    * removed.
+    */
+  private[sources] def writtenEntries(spark: SparkSession, dir: String, rel: String,
+      schema: StructType, mapping: Map[String, String], spec: TableSpec,
+      checks: Map[String, Column], committed: Option[Set[String]] = None): Seq[FileEntry] = {
+    val f = fs(spark, dir)
+    val abs = new Path(s"$dir/$rel")
+    for (names <- committed if f.exists(abs); st <- f.listStatus(abs))
+      if (st.isFile && !names.contains(st.getPath.getName)) f.delete(st.getPath, false)
+    val (entries, violations) =
+      collectEntries(spark, s"$dir/$rel", rel, schema, mapping, spec, checks)
+    if (violations.nonEmpty) {
+      f.delete(abs, true)
+      throw new IllegalArgumentException(s"CHECK constraint violated at $dir: " +
+        violations.toSeq.sorted.map { case (n, c) => s"'$n' (${checks(n)}) by $c row(s)" }
+          .mkString("; ") + " — commit aborted, no version published")
+    }
+    val kept = entries.filter(e => committed.forall(_.contains(baseName(e.path))))
+    if (kept.isEmpty) f.delete(abs, true)
+    kept
+  }
+
+  /** A table's CHECK constraints as [[writtenEntries]]' `checks`. */
+  private[sources] def checksOf(constraints: Map[String, String]): Map[String, Column] =
+    constraints.map { case (n, p) => n -> expr(p) }
 
   /** Identity partitioning: `df` CLUSTERED by the spec's partition
     * columns (one hash shuffle over this commit's rows, never the
@@ -745,26 +783,13 @@ object Snapshot {
       present.map(col): _*)
   }
 
-  /** Stage `df` as immutable data files under `dir`'s data/ WITHOUT
-    * any manifest publish — the write half of atomic CTAS/RTAS
-    * ([[GraftCatalog]] staging): the staged catalog later publishes
-    * them ([[publishStaged]]) or discards them ([[discardStaged]]).
-    * Returns (relative commit dir, entries). A reader can never see
-    * staged bytes: nothing references them until the publish wins.
-    */
-  private[sources] def stageDataFiles(spark: SparkSession, dir: String,
-      df: DataFrame, spec: TableSpec): (String, Seq[FileEntry]) = {
-    val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
-    val clustered = clusterByPartitions(spark, df, spec)
-    clustered.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-    (rel, collectEntries(spark, s"$dir/$rel", rel, clustered.schema, spec))
-  }
-
-  /** Publish staged entries as the table's first version (CTAS) or as
-    * a full-replace version (RTAS). CREATE atomicity rides the same
-    * single-winner v1 publish as every commit: two racing CTAS of the
-    * same table produce one table. RTAS resets constraints and column
-    * mapping — REPLACE TABLE re-DEFINES the table, unlike
+  /** Publish entries written by [[writeDataFiles]] as the table's first
+    * version (CTAS) or as a full-replace version (RTAS) — the publish
+    * half of atomic CTAS/RTAS ([[GraftCatalog]] staging); nothing
+    * references the files until it wins. CREATE atomicity rides the
+    * same single-winner v1 publish as every commit: two racing CTAS of
+    * the same table produce one table. RTAS resets constraints and
+    * column mapping — REPLACE TABLE re-DEFINES the table, unlike
     * INSERT OVERWRITE which only replaces rows.
     */
   private[sources] def publishStaged(spark: SparkSession, dir: String,
@@ -780,37 +805,13 @@ object Snapshot {
       specOverride = Some(spec))
   }
 
-  /** Remove a staged-but-never-published commit dir (CTAS abort). */
-  private[sources] def discardStaged(spark: SparkSession, dir: String,
-      rel: String): Unit =
-    fs(spark, dir).delete(new Path(s"$dir/$rel"), true)
-
-  /** Constraint gate shared by [[writeDataFiles]] and the DSv2
-    * row-level write path: ONE aggregation over the freshly written
-    * physical files at `dir/rel` (read back under their LOGICAL
-    * labels, positional), abort — delete the written data and throw,
-    * no manifest published — on any violating row. No-op when the
-    * table has no constraints.
+  /** Remove the commit dirs of written files no manifest will ever
+    * reference (a CTAS abort, a no-op replaceWhere).
     */
-  private[sources] def validateWritten(spark: SparkSession, dir: String, rel: String,
-      physSchema: StructType, logicalNames: Seq[String],
-      constraints: Map[String, String]): Unit = {
-    if (constraints.isEmpty) return
-    val written = spark.read.schema(physSchema).parquet(s"$dir/$rel")
-      .toDF(logicalNames.toIndexedSeq: _*)
-    val names = constraints.keys.toSeq.sorted
-    val aggs = names.map(n => sum(when(
-      not(coalesce(expr(constraints(n)), lit(true))), 1L).otherwise(0L)).as(n))
-    val r = written.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val bad = names.map(n => n -> r.getAs[Long](n)).filter(_._2 > 0)
-    if (bad.nonEmpty) {
-      fs(spark, dir).delete(new Path(s"$dir/$rel"), true)
-      throw new IllegalArgumentException(
-        s"CHECK constraint violated at $dir: " +
-          bad.map { case (n, c) => s"'$n' (${constraints(n)}) by $c row(s)" }.mkString("; ") +
-          " — commit aborted, no version published")
-    }
-  }
+  private[sources] def discardWritten(spark: SparkSession, dir: String,
+      files: Seq[FileEntry]): Unit =
+    files.map(e => new Path(absPath(dir, e.path)).getParent).distinct
+      .foreach(fs(spark, dir).delete(_, true))
 
   /** Publish a DSv2 row-level (SQL UPDATE / DELETE / MERGE) replace
     * commit: `files` is the COMPLETE new listing (carried + written),
@@ -1053,7 +1054,7 @@ object Snapshot {
     latestVersion(spark, dir).map(readManifest(spark, dir, _))
 
   /** The latest committed manifest; fails on a table with none. */
-  private def latest(spark: SparkSession, dir: String): Manifest =
+  private[sources] def latest(spark: SparkSession, dir: String): Manifest =
     baseManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
 
@@ -1153,7 +1154,7 @@ object Snapshot {
     val base = baseManifest(spark, dir)
     val effSpec = spec.orElse(base.map(_.spec)).getOrElse(TableSpec())
     val files = writeDataFiles(spark, dir, df,
-      base.map(_.constraints).getOrElse(Map.empty), spec = effSpec)
+      checksOf(base.map(_.constraints).getOrElse(Map.empty)), spec = effSpec)
     // a full replace references none of the old files, so the column
     // mapping resets to identity — retained versions keep THEIR OWN
     // manifest's mapping for time travel
@@ -1213,7 +1214,7 @@ object Snapshot {
         b.mapping ++ assignPhysical(b, added.toSeq).filter { case (l, p) => l != p }
     }
     val files = writeDataFiles(spark, dir, df,
-      base.map(_.constraints).getOrElse(Map.empty), mapping,
+      checksOf(base.map(_.constraints).getOrElse(Map.empty)), mapping,
       base.map(_.spec).getOrElse(TableSpec()))
     val v = commitManifest(spark, dir, "append", schema.toDDL,
       base.map(_.files).getOrElse(Seq.empty) ++ files, batchId, txnApp, base,
@@ -1514,8 +1515,7 @@ object Snapshot {
     * committed to this table (None for a pure-batch table).
     */
   def lastBatchId(spark: SparkSession, dir: String): Option[Long] =
-    latestVersion(spark, dir).flatMap(v =>
-      readManifest(spark, dir, v).lastBatchId)
+    baseManifest(spark, dir).flatMap(_.lastBatchId)
 
   /** The LATEST streaming writer's cursor: (txnApp, highest batch id
     * that app has committed) — observability only (history rendering,
@@ -1525,10 +1525,8 @@ object Snapshot {
     * nothing about the other's progress.
     */
   def lastTxn(spark: SparkSession, dir: String): Option[(String, Long)] =
-    latestVersion(spark, dir).flatMap { v =>
-      val m = readManifest(spark, dir, v)
-      for (b <- m.txnBatch) yield (m.txnApp.getOrElse("default"), b)
-    }
+    baseManifest(spark, dir).flatMap(m =>
+      m.txnBatch.map(b => (m.txnApp.getOrElse("default"), b)))
 
   /** The per-writer exactly-once cursor: highest batch id `app` has
     * ever committed to this table (None if it never has). Kept per
@@ -1541,8 +1539,7 @@ object Snapshot {
     * existing table.
     */
   def txnCursor(spark: SparkSession, dir: String, app: String): Option[Long] =
-    latestVersion(spark, dir).flatMap(v =>
-      readManifest(spark, dir, v).txns.get(app))
+    baseManifest(spark, dir).flatMap(_.txns.get(app))
 
   /** File-granular copy-on-write MERGE: apply `changes` (updates +
     * inserts + optional `deleteCol` tombstones, key-unique) onto the
@@ -1583,8 +1580,8 @@ object Snapshot {
     val physKeyCol = prev.mapping.getOrElse(keyCol, keyCol)
     val changeKeyType = changeKeys.schema(keyCol).dataType
     val r = changeKeys.agg(
-      min(statExpr(StructField(keyCol, changeKeyType))).as("__mn"),
-      max(statExpr(StructField(keyCol, changeKeyType))).as("__mx"),
+      min(statExpr(col(keyCol), changeKeyType)).as("__mn"),
+      max(statExpr(col(keyCol), changeKeyType)).as("__mx"),
       count(lit(1)).as("__n")).collect()(0)
     val changeRows = r.getLong(2)
     if (changeRows == 0) return (Seq.empty, prev.files, 0L)
@@ -1672,7 +1669,7 @@ object Snapshot {
     val base = addedCols.foldLeft(base0)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType)))
     val merged = graft.operators.Merge.upsert(base, changes, keys, deleteCol)
-    val newFiles = writeDataFiles(spark, dir, merged, prev.constraints, newMapping,
+    val newFiles = writeDataFiles(spark, dir, merged, checksOf(prev.constraints), newMapping,
       prev.spec)
     Some(commitManifest(spark, dir, "upsert", nullable(newSchema).toDDL,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
@@ -1726,7 +1723,7 @@ object Snapshot {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema)
       else readEntries(spark, dir, touched, curSchema, prev.tsMs, prev.mapping)
     val merged = Merge.merge(base, source, keys, clauses)
-    val newFiles = writeDataFiles(spark, dir, merged, prev.constraints, prev.mapping,
+    val newFiles = writeDataFiles(spark, dir, merged, checksOf(prev.constraints), prev.mapping,
       prev.spec)
     commitManifest(spark, dir, "merge", prev.schemaDdl,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
@@ -1810,7 +1807,7 @@ object Snapshot {
     (rel, countsBy(readDvs(spark, dir, Seq(rel)), "__dv_file"))
   }
 
-  private def liveRows(e: FileEntry): Long = e.rows - e.dv.map(_.deleted).getOrElse(0L)
+  private[sources] def liveRows(e: FileEntry): Long = e.rows - e.dv.map(_.deleted).getOrElse(0L)
 
   /** The fate of each of `files` under a row-level write that matched
     * `counts` live rows per file basename: (carried — no match, dead —
@@ -1891,7 +1888,7 @@ object Snapshot {
         case None => col(f.name)
       }
     }: _*)
-    val newFiles = writeDataFiles(spark, dir, updated, prev.constraints, prev.mapping,
+    val newFiles = writeDataFiles(spark, dir, updated, checksOf(prev.constraints), prev.mapping,
       prev.spec)
     Some(commitManifest(spark, dir, "update", prev.schemaDdl,
       untouched ++ newFiles, batchId, txnApp, Some(prev),
@@ -1943,7 +1940,7 @@ object Snapshot {
           case None => col(fl.name)
         }
       }: _*)
-      val newFiles = writeDataFiles(spark, dir, updated, prev.constraints,
+      val newFiles = writeDataFiles(spark, dir, updated, checksOf(prev.constraints),
         prev.mapping, prev.spec)
       // (b) tombstones: full-match files DROP (their rows all moved),
       // partial files carry a dv
@@ -1968,9 +1965,9 @@ object Snapshot {
     * and an append with a visible inconsistent state in between.
     *
     * Contract: every replacement row must itself satisfy `condition`
-    * (checked in one O(data) aggregation, abort before any write) —
-    * otherwise the op would smuggle rows into ranges it did not claim
-    * and re-running it would not converge. With the contract held the
+    * (checked by the write gate of [[writtenEntries]], abort before
+    * any publish) — otherwise the op would smuggle rows into ranges it
+    * did not claim and re-running it would not converge. With the contract held the
     * op is idempotent by content: a re-run replaces its own output.
     *
     * File fates, decided from [[matchedLivePerFile]]'s dv-aware
@@ -1998,23 +1995,24 @@ object Snapshot {
       s"replaceWhere: data lacks table columns: ${missing.mkString(", ")}")
     val aligned = data.select(schema.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    val strays = aligned.filter(!coalesce(condition, lit(false))).limit(1).count()
-    require(strays == 0L,
-      "replaceWhere: every replacement row must satisfy the predicate " +
-        "(rows outside the claimed range would make the overwrite non-idempotent)")
+    // the replacement rows go first, through the write gate: each must
+    // satisfy `condition` (NULL is outside the claimed range)
+    val newFiles = writeDataFiles(spark, dir, aligned, checksOf(prev.constraints) +
+      ("replaceWhere condition" -> coalesce(condition, lit(false))), prev.mapping, prev.spec)
     val counts = matchedLivePerFile(spark, dir, prev, condition)
-    // exact no-op (nothing to delete, nothing to insert): mint NO
+    // exact no-op (nothing to delete, nothing inserted): mint NO
     // version — an identical manifest state must not grow history
-    if (counts.isEmpty && aligned.isEmpty) return None
+    if (counts.isEmpty && newFiles.forall(_.rows == 0L)) {
+      discardWritten(spark, dir, newFiles)
+      return None
+    }
     val (carried, dead, partial) = fates(prev.files, counts)
     val kept =
       if (partial.isEmpty) Seq.empty[FileEntry]
       else writeDataFiles(spark, dir,
         readEntries(spark, dir, partial, schema, prev.tsMs, prev.mapping)
           .filter(!coalesce(condition, lit(false))),
-        prev.constraints, prev.mapping, prev.spec)
-    val newFiles = writeDataFiles(spark, dir, aligned, prev.constraints, prev.mapping,
-      prev.spec)
+        checksOf(prev.constraints), prev.mapping, prev.spec)
     Some(commitManifest(spark, dir, "replace_where", prev.schemaDdl,
       carried ++ kept ++ newFiles, batchId, txnApp, Some(prev),
       metrics = Map("rows_deleted" -> counts.values.sum,

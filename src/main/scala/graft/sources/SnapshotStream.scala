@@ -338,7 +338,8 @@ private[sources] final class SnapshotStreamTable(tableSchema: StructType, dir: S
         // columns where file-level pruning actually bites — identity
         // partition columns and bloom columns — so the optimizer never
         // builds runtime-filter subqueries for columns whose stats
-        // can't prune anyway.
+        // can't prune anyway. Only columns this scan reads qualify:
+        // the planner resolves them against the scan's output.
         @volatile private var runtimeEntries: Option[Seq[graft.sources.Snapshot.FileEntry]] = None
 
         private lazy val scanManifest: Snapshot.Manifest = {
@@ -352,7 +353,7 @@ private[sources] final class SnapshotStreamTable(tableSchema: StructType, dir: S
             : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
           val m = scanManifest
           (m.spec.partitionCols ++ m.spec.bloomCols).distinct
-            .filter(c => m.schema.fieldNames.contains(c))
+            .filter(c => required.fieldNames.contains(c))
             .map(org.apache.spark.sql.connector.expressions.Expressions.column)
             .toArray
         }
@@ -364,25 +365,10 @@ private[sources] final class SnapshotStreamTable(tableSchema: StructType, dir: S
           // v2 IN(col, literals…) → catalyst In over the PHYSICAL
           // attribute (manifest stats/blooms are physical-keyed);
           // anything unconvertible is ignored — pruning stays advisory
-          val exprs: Seq[Expression] = predicates.toSeq.flatMap { p =>
-            if (p.name() != "IN") None
-            else p.children().headOption match {
-              case Some(ref: org.apache.spark.sql.connector.expressions.NamedReference)
-                  if ref.fieldNames().length == 1 =>
-                val name = ref.fieldNames()(0)
-                m.schema.fields.find(_.name == name).flatMap { fld =>
-                  val lits = p.children().tail.flatMap {
-                    case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-                      Some(Literal(l.value, l.dataType()))
-                    case _ => None
-                  }
-                  if (lits.length == p.children().length - 1 && lits.nonEmpty)
-                    Some(CIn(AttributeReference(
-                      m.mapping.getOrElse(name, name), fld.dataType)(), lits.toSeq))
-                  else None
-                }
-              case _ => None
-            }
+          val exprs: Seq[Expression] = SnapshotStreamTable.inLists(predicates).flatMap {
+            case (name, lits) => m.schema.fields.find(_.name == name).filter(_ => lits.nonEmpty)
+              .map(fld => CIn(AttributeReference(m.mapping.getOrElse(name, name), fld.dataType)(),
+                lits.map(l => Literal(l.value, l.dataType()))))
           }
           if (exprs.isEmpty) return
           val phys = Snapshot.physicalSchema(m.schema, m.mapping)
@@ -475,6 +461,25 @@ private object SnapshotStreamTable {
     override def isNullable: Boolean = false
     override def comment(): String = "table-root-relative data file path of the row"
   }
+
+  /** The `IN(column, literals…)` predicates among DSv2 runtime
+    * filters, as (column, literals); a predicate of another shape, or
+    * with a value that is not a literal, is skipped.
+    */
+  def inLists(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
+      : Seq[(String, Seq[org.apache.spark.sql.connector.expressions.Literal[_]])] =
+    predicates.toSeq.flatMap { p =>
+      val ch = p.children().toSeq
+      ch.headOption match {
+        case Some(ref: org.apache.spark.sql.connector.expressions.NamedReference)
+            if p.name() == "IN" && ref.fieldNames().length == 1 =>
+          val lits = ch.tail.collect {
+            case l: org.apache.spark.sql.connector.expressions.Literal[_] => l
+          }
+          if (lits.length == ch.length - 1) Some(ref.fieldNames()(0) -> lits) else None
+        case _ => None
+      }
+    }
 
   /** EXACT v1-filter → Column translation for SQL DELETE: every node
     * must convert or the whole condition is rejected (None) — unlike
@@ -725,8 +730,8 @@ private final class SnapshotMicroBatchStream(dir: String, schema: StructType,
       val added = m.files.filterNot(e => prev.contains(e.path))
       m.op match {
         case "init" | "append" =>
-          added.foreach(e =>
-            parts += SnapshotInputPartition(Snapshot.absPath(dir, e.path), e.bytes))
+          added.foreach(e => parts += SnapshotBatchPartition(Snapshot.absPath(dir, e.path),
+            e.bytes, Snapshot.baseName(e.path), Array.empty, e.path))
         case "alter" => // metadata-only (constraints); no rows moved — pass through
           ()
         case other if skipRewrites => // documented opt-in: rewrite versions carry no NEW rows
@@ -745,37 +750,11 @@ private final class SnapshotMicroBatchStream(dir: String, schema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(ParquetReadBridge.reader(spark, schema, Map.empty))
+    new SnapshotBatchReaderFactory(ParquetReadBridge.reader(spark, schema, Map.empty),
+      ParquetReadBridge.reader(spark, SnapshotBatchScan.DvSchema, Map.empty))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-private final case class SnapshotInputPartition(absPath: String, bytes: Long)
-    extends InputPartition
-
-private final class SnapshotReaderFactory(
-    readFile: PartitionedFile => Iterator[InternalRow])
-    extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SnapshotInputPartition]
-    new PartitionReader[InternalRow] {
-      // the engine's reader may hand back ColumnarBatch-as-InternalRow
-      // (the FileScanRDD contract); flatten both shapes
-      private val rows: Iterator[InternalRow] =
-        readFile(ParquetReadBridge.wholeFile(p.absPath, p.bytes)).flatMap {
-          case b: ColumnarBatch => b.rowIterator().asScala
-          case r => Iterator.single(r)
-        }
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        if (rows.hasNext) { current = rows.next(); true } else false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
 }
 
 /** Task-side factory for the streaming SINK (`writeStream.toTable`):
@@ -819,10 +798,7 @@ private final class SnapshotStreamingWrite(dir: String,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val s = spark
-    val v = Snapshot.latestVersion(s, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir — " +
-        "create the table before streaming into it"))
-    val m = Snapshot.readManifest(s, dir, v)
+    val m = Snapshot.latest(s, dir)
     require(writeSchema.fieldNames.toSeq == m.schema.fieldNames.toSeq,
       s"streaming write schema ${writeSchema.fieldNames.mkString(",")} must match " +
         s"the table schema ${m.schema.fieldNames.mkString(",")}")
@@ -835,36 +811,14 @@ private final class SnapshotStreamingWrite(dir: String,
   override def commit(epochId: Long,
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
     val s = spark
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val rel = relOf(epochId)
-    val p = new Path(s"$dir/$rel")
-    val committed: Set[String] = messages.flatMap {
-      case RowLevelFileCommit(names) => names
-      case _ => Seq.empty
-    }.toSet
-    // drop files of never-committed attempts (speculation/retries)
-    if (fs.exists(p))
-      fs.listStatus(p).foreach { st =>
-        if (st.isFile && !committed.contains(st.getPath.getName))
-          fs.delete(st.getPath, false)
-      }
-    val m = Snapshot.readManifest(s, dir, Snapshot.latestVersion(s, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $dir")))
-    val phys = Snapshot.physicalSchema(m.schema, m.mapping)
-    val entries =
-      if (committed.isEmpty) Seq.empty
-      else Snapshot.collectEntries(s, s"$dir/$rel", rel, phys, m.spec)
-        .filter(e => committed.contains(Snapshot.baseName(e.path)))
-    if (entries.isEmpty) { // empty epoch: no version, no debris
-      if (fs.exists(p)) fs.delete(p, true)
-      return
-    }
-    Snapshot.validateWritten(s, dir, rel, phys,
-      m.schema.fieldNames.toSeq, m.constraints)
-    Snapshot.appendEntries(s, dir, entries, epochId, queryId) match {
-      case None => fs.delete(p, true) // replayed epoch: bytes redundant
-      case Some(_) => ()
-    }
+    val m = Snapshot.latest(s, dir)
+    val entries = Snapshot.writtenEntries(s, dir, relOf(epochId), m.schema, m.mapping,
+      m.spec, Snapshot.checksOf(m.constraints),
+      Some(messages.collect { case RowLevelFileCommit(names) => names }.flatten.toSet))
+    // an empty epoch mints no version (and leaves no commit dir); a
+    // replayed one publishes nothing, and its bytes are redundant
+    if (entries.nonEmpty && Snapshot.appendEntries(s, dir, entries, epochId, queryId).isEmpty)
+      abort(epochId, messages)
   }
 
   override def abort(epochId: Long,

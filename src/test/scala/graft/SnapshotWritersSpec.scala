@@ -104,7 +104,7 @@ class SnapshotWritersSpec extends SparkSpec {
     // measured bounds: one more job here means a writer scans, writes
     // or counts its candidates more often than it must
     val bound = Map("deleteWhere" -> 6, "updateWhere" -> 5, "updateWhereMor" -> 9,
-      "replaceWhere" -> 9)
+      "replaceWhere" -> 8)
     val dirs = bound.keys.map(_ -> twoFiles()).toMap
     val jobs = Map(
       "deleteWhere" -> jobsOf(Snapshot.deleteWhere(spark, dirs("deleteWhere"), col("id") === 1L)),
