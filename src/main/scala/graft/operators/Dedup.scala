@@ -4,7 +4,6 @@ import graft.functions.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for an LLM-training-data pipeline:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
@@ -574,8 +573,7 @@ object Dedup {
     * both hash-partitioned on id — no driver-side graph. Labels only
     * decrease, so `sum(label)` is a cheap monotone convergence
     * signal; near-dup components have tiny diameters, so iterations
-    * ≈ 3–5 in practice. `localCheckpoint` cuts the growing lineage
-    * (standard for iterative DataFrame algorithms).
+    * ≈ 3–5 in practice; the rounds run under [[Graph.rounds]].
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 20): DataFrame = {
@@ -590,60 +588,23 @@ object Dedup {
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(true)
-    // convergence signal in unbounded decimal: a long sum could
-    // ANSI-overflow on 64-bit ids at scale. SUM over zero rows is SQL
-    // NULL — map it to zero so a pair-free corpus (no near-dups found)
-    // converges on the first check instead of NPE-ing
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("cluster").cast(DecimalType(38, 0)))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
     // initial labels fold the FIRST propagation step into the same
     // aggregation that would otherwise just distinct the ids:
     // label₀(v) = min(v, min(neighbors)) — one iteration's worth of
     // jobs saved, identical fixpoint.
-    //
-    // ONE Spark job per iteration: each iteration's labels are
-    // persist()ed and the labelSum action both populates the cache and
-    // computes the monotone convergence signal — an eager checkpoint
-    // followed by a separate sum action would double the job count.
-    // persist, NOT a lazy localCheckpoint: lazily-checkpoint-marked
-    // RDDs racing the DAG scheduler deadlock on the global
-    // RDDCheckpointData lock (observed live). Lineage depth grows by a
-    // constant per iteration on top of the checkpointed edge list and
-    // is bounded by maxIter; superseded iterations are unpersisted.
-    var labels = edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), min(col("src"))).as("cluster"))
-      .persist()
-    var prevSum = labelSum(labels)
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
+    // convergence signal in unbounded decimal: a long sum could
+    // ANSI-overflow on 64-bit ids at scale. A pair-free corpus (no
+    // near-dups found) sums to NULL every round and so converges on
+    // the first check.
+    val labelSum = sum(col("cluster").cast(DecimalType(38, 0)))
+    Graph.rounds(init, maxIter, signal = Some(labelSum)) { (labels, _) =>
       val msgs = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("cluster"))
-      val next0 = msgs.unionByName(labels.select(col("id"), col("cluster")))
+      msgs.unionByName(labels.select(col("id"), col("cluster")))
         .groupBy("id").agg(min(col("cluster")).as("cluster"))
-      // `labels` feeds BOTH the join and the union, so the logical
-      // plan DOUBLES per iteration — a long-diameter component (a
-      // giant co-purchase component needs ~10 rounds) grows a 2^k-node
-      // plan whose analysis alone OOMs the driver (observed: 2 GB plan
-      // strings at sf0.01). Truncate lineage with an EAGER
-      // localCheckpoint every 3rd round; other rounds keep the cheap
-      // persist (1 job/iteration). Never a LAZY localCheckpoint here —
-      // multi-consumer lazy checkpoints deadlock the DAG scheduler on
-      // the RDDCheckpointData lock (SKILL gotcha).
-      val next = if ((i + 1) % 3 == 0) next0.localCheckpoint(true)
-        else next0.persist()
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels.unpersist(false)
-      labels = next
-      i += 1
     }
-    // the labels outlive this call: hand back a checkpoint (one small
-    // job over the cached frame), not a cache entry no caller releases
-    if (labels.storageLevel == StorageLevel.NONE) labels
-    else try labels.localCheckpoint(true) finally { labels.unpersist(false); () }
   }
 
   /** Cluster-aware dedup: keep one doc (the min id) per connected

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,22 +16,75 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape per iteration: ONE shuffle join (transition matrix ⋈
   * ranks, both hash-partitioned on the source node) + ONE aggregation
   * by destination. The transition matrix is computed once and
-  * persisted; ranks are localCheckpoint'ed (eager, single-consumer —
-  * lazy checkpoints deadlock the DAG scheduler on the shared
-  * RDDCheckpointData lock) so the logical plan stays O(1) deep
-  * instead of O(iterations). The only driver-side values are two
-  * scalars: the node count (once) and the dangling mass (one number
-  * per iteration).
+  * persisted; the rank frames go through [[rounds]], whose periodic
+  * eager cuts keep the logical plan O(1) deep instead of
+  * O(iterations). The only driver-side values are counts taken once
+  * (nodes, dangling nodes).
   */
 object Graph {
 
-  /** Eager-checkpoint (= one Spark action + lineage cut) every this
-    * many iterations in the fixed-iteration operators; intermediate
-    * rounds persist() lazily. 3 bounds the logical-plan doubling of a
-    * twice-consumed iterate at 2³ while cutting the per-round action
-    * count 3× — same constant the connectedComponents resolver uses.
+  /** [[rounds]] cuts (one eager localCheckpoint = one Spark action +
+    * lineage cut) every this many rounds; the rounds between persist().
+    * 3 bounds the logical-plan doubling of a twice-consumed iterate at
+    * 2³ while running one action per three rounds instead of one per
+    * round.
     */
   private[graft] val IterCutEvery = 3
+
+  /** The round loop of every iterative operator: runs `step` (given
+    * the previous round's frame and the 1-based round number) up to
+    * `maxRounds` times from `init` and returns the last round's frame.
+    *
+    * The policy, for every caller (the superstep discipline of
+    * Pregel):
+    *   - each round's frame is persist()ed. A cached plan keeps its
+    *     hash(node) output partitioning, so the next round's joins
+    *     against it stay co-partitioned and only the round's own
+    *     aggregation shuffles; an eager checkpoint per round would
+    *     cost one Spark job per round AND erase that partitioning.
+    *   - every [[IterCutEvery]]-th round, and the last, is cut instead
+    *     by ONE eager localCheckpoint, the round-group's one action. A
+    *     step that reads its input twice (a join and a union) doubles
+    *     the logical plan every round; without the cut a long-diameter
+    *     component grows a 2^k-node plan whose analysis alone runs the
+    *     driver out of memory (observed: 2 GB plan strings at sf0.01).
+    *   - a superseded cache is released only once a later frame is
+    *     materialized; an earlier unpersist would make the next action
+    *     recompute the chain through its doubled plan.
+    *   - never a lazy localCheckpoint: materializing one under a plan
+    *     with several consumers deadlocks against the DAG scheduler on
+    *     the global RDDCheckpointData lock.
+    *
+    * With a convergence `signal` (an aggregate over the round's frame
+    * that stops changing at the fixed point, such as a sum of labels
+    * that only decrease) the rounds end when its value repeats, so the
+    * last round is not known in advance: `init` is persisted too, the
+    * signal is the one action per round (it also fills that round's
+    * cache, so the previous one goes at once), and the last frame is
+    * handed back as a checkpoint, never a cache no caller releases.
+    */
+  private[graft] def rounds(init: DataFrame, maxRounds: Int, signal: Option[Column] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    val live = scala.collection.mutable.ListBuffer[DataFrame]()
+    def release(): Unit = { live.foreach(_.unpersist(false)); live.clear() }
+    def measure(df: DataFrame): Option[Any] = signal.map(s => df.agg(s).head().get(0))
+    var cur = if (signal.isEmpty) init else { val c = init.persist(); live += c; c }
+    var last = measure(cur)
+    var r = 1
+    var converged = false
+    while (r <= maxRounds && !converged) {
+      val next = step(cur, r)
+      val cut = r % IterCutEvery == 0 || (signal.isEmpty && r == maxRounds)
+      cur = if (cut) next.localCheckpoint(true) else next.persist()
+      val s = measure(cur)
+      converged = s.isDefined && s == last
+      last = s
+      if (cut || signal.isDefined) release()
+      if (!cut) live += cur
+      r += 1
+    }
+    if (live.isEmpty) cur else try cur.localCheckpoint(true) finally release()
+  }
 
   /** Weighted PageRank, fixed iteration count. Returns (node, rank);
     * ranks sum to 1. Dangling nodes (no out-edges) spread their mass
@@ -39,20 +92,63 @@ object Graph {
     */
   def pageRank(edges: DataFrame, src: String, dst: String, weight: String,
       iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    // the caller's edge derivation can be arbitrarily expensive (a
-    // fact-join + agg in the purchase-graph query) and the init reads
-    // it four times (node set twice, out-weights, transition rows) —
-    // persist it once
-    val e = edges.select(col(src).cast("long").as("src"),
+    val e = weightedEdges(edges, src, dst, weight)
+    val nodes = nodeIds(e).persist(StorageLevel.MEMORY_AND_DISK)
+    val n = nodes.count().toDouble
+    randomWalk(e, nodes, iterations, damping, start = lit(1.0 / n),
+      restart = lit((1.0 - damping) / n), danglingShare = col("dmass") / n)
+  }
+
+  /** Personalized PageRank / random walk with restart, fixed
+    * iteration count: the restart mass (and any dangling mass) goes
+    * to the SEED distribution instead of uniformly everywhere, so
+    * ranks measure proximity TO the seed set — the similarity /
+    * recommendation face of [[pageRank]] ("which nodes does a walk
+    * anchored at these seeds keep visiting"). `seeds` must expose a
+    * `node` column.
+    */
+  def personalizedPageRank(edges: DataFrame, src: String, dst: String,
+      weight: String, seeds: DataFrame, iterations: Int = 6,
+      damping: Double = 0.85): DataFrame = {
+    val e = weightedEdges(edges, src, dst, weight)
+    val sd = seeds.select(col("node").cast("long").as("node")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ns = sd.count().toDouble
+    require(ns > 0, "personalizedPageRank needs a non-empty seed set")
+    val nodes = nodeIds(e)
+      .join(sd.withColumn("is_seed", lit(true)), Seq("node"), "left")
+      .select(col("node"),
+        when(col("is_seed"), lit(1.0 / ns)).otherwise(lit(0.0)).as("e0"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ranks = randomWalk(e, nodes, iterations, damping, start = col("e0"),
+      restart = lit(1.0 - damping) * col("e0"), danglingShare = col("dmass") * col("e0"))
+    sd.unpersist(false)
+    ranks
+  }
+
+  // the caller's edge derivation can be arbitrarily expensive (a
+  // fact-join + agg in the purchase-graph query) and every iterative
+  // consumer reads it several times (node set, out-weights, transition
+  // rows, each round's join) — persist it once
+  private def weightedEdges(edges: DataFrame, src: String, dst: String, weight: String): DataFrame =
+    edges.select(col(src).cast("long").as("src"),
       col(dst).cast("long").as("dst"), col(weight).cast("double").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count().toDouble
+  private def nodeIds(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
 
+  /** The random walk of [[pageRank]] and [[personalizedPageRank]]:
+    * `iterations` rounds of rank ← restart + d·(in-flow + dangling
+    * share) over the persisted edge frame `e` (src, dst, w) and node
+    * frame `nodes`. `start`, `restart` and `danglingShare` are each
+    * caller's own expressions over `nodes`' columns (`danglingShare`
+    * also reads the round's dangling mass as `dmass`), so each walk
+    * keeps the exact double arithmetic its DuckDB oracle replays.
+    * Releases `e` and `nodes`.
+    */
+  private def randomWalk(e: DataFrame, nodes: DataFrame, iterations: Int, damping: Double,
+      start: Column, restart: Column, danglingShare: Column): DataFrame = {
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
     val trans = e.join(outW, "src")
       .select(col("src"), col("dst"), (col("w") / col("out_w")).as("frac"))
@@ -63,158 +159,39 @@ object Graph {
     // rank mass changes per iteration (otherwise every iteration's
     // scalar would re-run the whole edge-derivation subtree). When the
     // set is EMPTY (symmetrized graphs: every node has out-edges) the
-    // whole mass branch is dropped — dmass is identically +0.0 and
-    // x + 0.0 == x for the non-negative contribs, so the update is
-    // bit-identical without the per-iteration semi-join + 1-row agg +
-    // broadcast it would otherwise pay.
-    val dangling = nodes.join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
+    // whole mass branch is dropped — the dangling share is identically
+    // +0.0 and x + 0.0 == x for the non-negative contribs, so the
+    // update is bit-identical without the per-iteration semi-join +
+    // 1-row agg + broadcast it would otherwise pay.
+    val dangling = nodes.select(col("node"))
+      .join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nDangling = dangling.count()
 
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-      .localCheckpoint(true)
-
-    // Iteration discipline (r15): persist() per iteration, ONE eager
-    // localCheckpoint action every CutEvery rounds (and on the last) —
-    // a per-iteration eager checkpoint costs one Spark job per round
-    // AND erases the partitioning, so every consumer re-shuffles the
-    // rank frame (mass semi-join + transition join = 2 avoidable
-    // exchanges/round). A persisted frame keeps hash(node)
-    // partitioning (cached plans pin output partitioning), so the
-    // dangling semi-join and the trans⋈ranks join are co-partitioned
-    // and only the groupBy(dst) — PageRank's one fundamental data
-    // movement — shuffles. Superseded caches are released only AFTER
-    // the next cut materializes (an earlier unpersist would force the
-    // chain to recompute through its doubled logical plan); the cut
-    // bounds plan depth the same way connectedComponents' every-3rd-
-    // round checkpoint does.
-    val live = scala.collection.mutable.ListBuffer[DataFrame]()
-    var i = 0
-    while (i < iterations) {
+    val init = nodes.select(col("node"), start.as("rank")).localCheckpoint(true)
+    val ranks = rounds(init, iterations) { (prev, _) =>
       val contribs = trans
-        .join(ranks.withColumnRenamed("node", "src"), "src")
+        .join(prev.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("frac") * col("rank")).as("contrib"))
-      val next0 = if (nDangling == 0L) {
+      val inflow = coalesce(col("contrib"), lit(0.0))
+      if (nDangling == 0L) {
         nodes.join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
+          .select(col("node"), (restart + lit(damping) * inflow).as("rank"))
       } else {
         // dangling mass as a broadcast 1-row frame, NOT a driver
         // scalar: it rides in the same DAG as the rank update —
         // nothing upstream re-evaluates (both branches read the
         // cached previous ranks)
-        val mass = ranks.join(dangling, Seq("node"), "left_semi")
+        val mass = prev.join(dangling, Seq("node"), "left_semi")
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
         nodes
           .join(contribs, Seq("node"), "left")
           .crossJoin(broadcast(mass))
-          .select(col("node"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("dmass") / n))
-              .as("rank"))
+          .select(col("node"), (restart + lit(damping) * (inflow + danglingShare)).as("rank"))
       }
-      if ((i + 1) % IterCutEvery == 0 || i == iterations - 1) {
-        ranks = next0.localCheckpoint(true) // the round-group's ONE action
-        live.foreach(_.unpersist(false)); live.clear()
-      } else {
-        ranks = next0.persist()
-        live += ranks
-      }
-      i += 1
     }
-    e.unpersist(false)
-    nodes.unpersist(false)
-    trans.unpersist(false)
-    dangling.unpersist(false)
-    ranks
-  }
-
-  /** Personalized PageRank / random walk with restart, fixed
-    * iteration count: the restart mass (and any dangling mass) goes
-    * to the SEED distribution instead of uniformly everywhere, so
-    * ranks measure proximity TO the seed set — the similarity /
-    * recommendation face of [[pageRank]] ("which nodes does a walk
-    * anchored at these seeds keep visiting"). Same one-action-per-
-    * iteration checkpoint discipline and cache hygiene as pageRank;
-    * `seeds` must expose a `node` column.
-    */
-  def personalizedPageRank(edges: DataFrame, src: String, dst: String,
-      weight: String, seeds: DataFrame, iterations: Int = 6,
-      damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst"), col(weight).cast("double").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val sd = seeds.select(col("node").cast("long").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ns = sd.count().toDouble
-    require(ns > 0, "personalizedPageRank needs a non-empty seed set")
-
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .join(sd.withColumn("is_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0 / ns)).otherwise(lit(0.0)).as("e0"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-    val trans = e.join(outW, "src")
-      .select(col("src"), col("dst"), (col("w") / col("out_w")).as("frac"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    trans.count()
-    val dangling = nodes.select(col("node"))
-      .join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // empty dangling set (symmetrized graphs) → the mass branch is
-    // dropped per iteration; dmass·e0 is identically +0.0 so the
-    // update is bit-identical (see pageRank)
-    val nDangling = dangling.count()
-
-    var ranks = nodes.select(col("node"), col("e0").as("rank"))
-      .localCheckpoint(true)
-    // persist-per-round + cut-every-IterCutEvery (see pageRank): the
-    // semi-join and transition join stay co-partitioned, one action
-    // per round-group instead of per round
-    val live = scala.collection.mutable.ListBuffer[DataFrame]()
-    var i = 0
-    while (i < iterations) {
-      val contribs = trans
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("frac") * col("rank")).as("contrib"))
-      val next0 = if (nDangling == 0L) {
-        nodes.join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(1.0 - damping) * col("e0") +
-              lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-      } else {
-        val mass = ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-        nodes
-          .join(contribs, Seq("node"), "left")
-          .crossJoin(broadcast(mass))
-          .select(col("node"),
-            (lit(1.0 - damping) * col("e0") +
-              lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-                col("dmass") * col("e0"))).as("rank"))
-      }
-      if ((i + 1) % IterCutEvery == 0 || i == iterations - 1) {
-        ranks = next0.localCheckpoint(true)
-        live.foreach(_.unpersist(false)); live.clear()
-      } else {
-        ranks = next0.persist()
-        live += ranks
-      }
-      i += 1
-    }
-    e.unpersist(false)
-    sd.unpersist(false)
-    nodes.unpersist(false)
-    trans.unpersist(false)
-    dangling.unpersist(false)
+    Seq(e, nodes, trans, dangling).foreach(_.unpersist(false))
     ranks
   }
 
@@ -229,50 +206,44 @@ object Graph {
     * the growth for any realistic iteration count) — a single L1
     * normalization at the end yields shares. Per iteration: two
     * shuffle join+agg pairs (edges ⋈ hubs by src → auth; edges ⋈
-    * auths by dst → hub), each eagerly localCheckpoint'ed so the plan
-    * stays O(1) deep. Returns (role, node, share) with role ∈
+    * auths by dst → hub), under the persist/cut/release policy of
+    * [[rounds]]. Returns (role, node, share) with role ∈
     * {hub, authority}; shares sum to 1 within each role.
     */
   def hits(edges: DataFrame, src: String, dst: String, weight: String,
       iterations: Int = 4): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst"), col(weight).cast("double").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = weightedEdges(edges, src, dst, weight)
 
     var hubs = e.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1.0).as("hub"))
       .localCheckpoint(true)
-    // persist-per-half-round + cut-every-IterCutEvery on the hub frame
-    // (see pageRank): each round was TWO eager checkpoint actions;
-    // now a round-group of 3 is one action and the e⋈scores joins
-    // reuse the cached frames' partitioning
+    // the [[rounds]] policy in a loop of its own: a round here persists
+    // TWO frames (the auth frame is read by the round's hub update and,
+    // from the last round, by the output) and `rounds` tracks one
     var auths: DataFrame = null
     val live = scala.collection.mutable.ListBuffer[DataFrame]()
-    var i = 0
-    while (i < iterations) {
-      val a = e.join(hubs.withColumnRenamed("node", "src"), "src")
+    for (r <- 1 to iterations) {
+      auths = e.join(hubs.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("w") * col("hub")).as("auth"))
         .persist()
-      live += a
-      val next0 = e.join(a.withColumnRenamed("node", "dst"), "dst")
+      val next = e.join(auths.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"))
         .agg(sum(col("w") * col("auth")).as("hub"))
-      if ((i + 1) % IterCutEvery == 0 || i == iterations - 1) {
-        hubs = next0.localCheckpoint(true)
-        // the final round's auth frame feeds the output — keep it live
-        val keep = if (i == iterations - 1) Some(a) else None
-        live.filterNot(f => keep.exists(_ eq f)).foreach(_.unpersist(false))
-        live.clear()
+      if (r % IterCutEvery == 0 || r == iterations) {
+        hubs = next.localCheckpoint(true)
+        live.foreach(_.unpersist(false)); live.clear()
       } else {
-        hubs = next0.persist()
+        hubs = next.persist()
         live += hubs
       }
-      auths = a
-      i += 1
+      live += auths // released by the next cut, or below
     }
     e.unpersist(false)
+    // the last auth frame outlives the loop: hand back a checkpoint of
+    // it (one small job over its cache), not a cache no caller releases
+    auths = try auths.localCheckpoint(true) finally live.foreach(_.unpersist(false))
     // totals as broadcast 1-row frames (never driver scalars) — the
     // share projection stays one job per role
     val hTot = hubs.agg(sum(col("hub")).as("tot"))
@@ -296,7 +267,7 @@ object Graph {
     * distinct — the frontier is pruned against the reached set
     * (left_anti) so work is proportional to NEW reachings, and both
     * accumulator and frontier are eagerly localCheckpoint'ed per hop
-    * (O(1)-deep plan, same discipline as [[pageRank]]). Edge list is
+    * (O(1)-deep plan). Edge list is
     * deduped up front; no row ever carries more than (root, node).
     */
   def kHopReachability(edges: DataFrame, src: String, dst: String,
@@ -338,8 +309,8 @@ object Graph {
     *
     * Scale shape per round: ONE shuffle join (frontier distances ⋈
     * edges on the source endpoint) + ONE min-aggregation by
-    * destination; distances are eagerly localCheckpoint'ed so the
-    * plan stays O(1)-deep. The source is a 1-row frame (min node id)
+    * destination, under the persist/cut/release policy of [[rounds]].
+    * The source is a 1-row frame (min node id)
     * computed inside the DAG — no driver collect.
     */
   def sssp(edges: DataFrame, src: String, dst: String, weight: String,
@@ -349,25 +320,14 @@ object Graph {
     val e = edges.select(col(src).cast("long").as("es"),
         col(dst).cast("long").as("ed"), col(weight).cast(D).as("wt"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = e.agg(min(col("es")).as("node"))
+    val source = e.agg(min(col("es")).as("node"))
       .withColumn("dist", lit(new java.math.BigDecimal(0)).cast(D))
       .localCheckpoint(true)
-    // persist-per-round + cut-every-IterCutEvery (see pageRank); dist
-    // is consumed twice per round (relax join + union), so the cache
-    // also stops the round's plan doubling from re-evaluating it
-    val live = scala.collection.mutable.ListBuffer[DataFrame]()
-    for (r <- 1 to k) {
-      val relaxed = dist.join(e, dist("node") === e("es"))
+    val dist = rounds(source, k) { (prev, _) =>
+      val relaxed = prev.join(e, prev("node") === e("es"))
         .select(col("ed").as("node"), (col("dist") + col("wt")).cast(D).as("dist"))
-      val next0 = dist.unionByName(relaxed)
+      prev.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).cast(D).as("dist"))
-      if (r % IterCutEvery == 0 || r == k) {
-        dist = next0.localCheckpoint(true)
-        live.foreach(_.unpersist(false)); live.clear()
-      } else {
-        dist = next0.persist()
-        live += dist
-      }
     }
     e.unpersist(false)
     dist
@@ -383,7 +343,7 @@ object Graph {
     *
     * Scale shape per round: ONE shuffle join (labels ⋈ undirected
     * edges) + ONE (node,label) count + ONE struct-max argmax by node
-    * — all partial-aggregated; labels eagerly localCheckpoint'ed.
+    * — all partial-aggregated; rounds under [[rounds]].
     */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
       k: Int): DataFrame = {
@@ -393,26 +353,15 @@ object Graph {
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = und.select(col("a").as("node")).distinct()
+    val ids = und.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(true)
-    // persist-per-round + cut-every-IterCutEvery (see pageRank): one
-    // action per round-group; the und⋈labels join reuses the cached
-    // label frame instead of re-shuffling a checkpointed one
-    val live = scala.collection.mutable.ListBuffer[DataFrame]()
-    for (r <- 1 to k) {
-      val next0 = und.join(labels, und("b") === labels("node"))
+    val labels = rounds(ids, k) { (prev, _) =>
+      und.join(prev, und("b") === prev("node"))
         .groupBy(col("a"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("a"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("a").as("node"), (-col("m.nl")).as("label"))
-      if (r % IterCutEvery == 0 || r == k) {
-        labels = next0.localCheckpoint(true)
-        live.foreach(_.unpersist(false)); live.clear()
-      } else {
-        labels = next0.persist()
-        live += labels
-      }
     }
     und.unpersist(false)
     labels
@@ -523,12 +472,7 @@ object Graph {
     * ordered by node.
     */
   def localClustering(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = edges
-      .select(least(col(src), col(dst)).cast("long").as("lo"),
-        greatest(col(src), col(dst)).cast("long").as("hi"))
-      .filter(col("lo").isNotNull && col("hi").isNotNull && col("lo") < col("hi"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = triangleCanonicalEdges(edges, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val deg = e.select(col("lo").as("node"))
         .unionAll(e.select(col("hi").as("node")))

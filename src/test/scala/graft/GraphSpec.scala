@@ -21,6 +21,31 @@ class GraphSpec extends SparkSpec {
     ranks
   }
 
+  /** Driver-side reference random walk with restart to `seeds`. */
+  private def refPpr(edges: Seq[(Long, Long, Double)], seeds: Set[Long], iterations: Int,
+      d: Double = 0.85): Map[Long, Double] = {
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
+    val outW = edges.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    val e0 = nodes.map(v => v -> (if (seeds(v)) 1.0 / seeds.size else 0.0)).toMap
+    var ranks = e0
+    for (_ <- 1 to iterations) {
+      val dangling = nodes.filterNot(outW.contains).map(ranks).sum
+      val contrib = scala.collection.mutable.Map[Long, Double]().withDefaultValue(0.0)
+      edges.foreach { case (s, t, w) => contrib(t) += ranks(s) * w / outW(s) }
+      ranks = nodes.map(v =>
+        v -> ((1 - d) * e0(v) + d * (contrib(v) + dangling * e0(v)))).toMap
+    }
+    ranks
+  }
+
+  private def runPpr(edges: Seq[(Long, Long, Double)], seeds: Seq[Long],
+      iterations: Int): Map[Long, Double] = {
+    import spark.implicits._
+    Graph.personalizedPageRank(edges.toDF("src", "dst", "w"), "src", "dst", "w",
+      seeds.toDF("node"), iterations)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+  }
+
   private def run(edges: Seq[(Long, Long, Double)], iterations: Int): Map[Long, Double] = {
     import spark.implicits._
     Graph.pageRank(edges.toDF("src", "dst", "w"), "src", "dst", "w", iterations)
@@ -41,6 +66,33 @@ class GraphSpec extends SparkSpec {
     assert(got.keySet == expected.keySet)
     expected.foreach { case (v, r) =>
       assert(math.abs(got(v) - r) < 1e-9, s"node $v: got ${got(v)} want $r")
+    }
+  }
+
+  test("personalizedPageRank matches the reference walk: seeds, a dangling node, an unreachable island") {
+    // 6 is dangling; the island 7 <-> 8 is out of the seeds' reach
+    val edges = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 1L, 1.0), (3L, 4L, 3.0), (4L, 5L, 1.0),
+      (5L, 1L, 2.0), (2L, 6L, 1.0), (7L, 8L, 1.0), (8L, 7L, 1.0))
+    val expected = refPpr(edges, Set(1L, 4L), 6)
+    val got = runPpr(edges, Seq(1L, 4L), 6)
+    assert(got.keySet == expected.keySet)
+    expected.foreach { case (v, r) =>
+      assert(math.abs(got(v) - r) < 1e-9, s"node $v: got ${got(v)} want $r")
+    }
+    assert(got(6L) > 0.0, s"the dangling node is reachable: $got")
+    assert(got(7L) == 0.0 && got(8L) == 0.0, s"the island gets no mass: $got")
+  }
+
+  test("personalizedPageRank seeded with every node is pageRank") {
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(60)((rnd.nextInt(12).toLong, rnd.nextInt(15).toLong,
+      1.0 + rnd.nextInt(5))).distinct
+    val all = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    val pr = run(edges, 8)
+    val ppr = runPpr(edges, all, 8)
+    assert(ppr.keySet == pr.keySet)
+    pr.foreach { case (v, r) =>
+      assert(math.abs(ppr(v) - r) < 1e-12, s"node $v: ppr ${ppr(v)} pagerank $r")
     }
   }
 
